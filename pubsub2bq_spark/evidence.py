@@ -26,11 +26,12 @@ Known coarseness (documented, accepted):
 
 * Cross-module helpers are followed ONLY for first-party kernel modules
   (``pubsub2bq_spark.functions.*``): the closure walks ``from
-  pubsub2bq_spark.functions.X import name`` bindings (module-level or
-  inside followed function bodies) into the kernel module and hashes the
-  imported symbol's closure there, recursively across kernel modules
-  (VERDICT r14 #1: the r14 codec-kernel rewrites were invisible to the
-  same-module-only hash, so the rotation never re-checked the callers).
+  pubsub2bq_spark.functions.X import name`` bindings, absolute or
+  relative (module-level or inside followed function bodies), into the
+  kernel module and hashes the imported symbol's closure there,
+  recursively across kernel modules (VERDICT r14 #1: the r14
+  codec-kernel rewrites were invisible to the same-module-only hash,
+  so the rotation never re-checked the callers).
   Shared infra (``tables.load`` / ``materialize`` / ``registry`` etc.)
   stays out of the hash; including it would flush most of the registry
   on any shared-infra edit, starving the 50-key budget.
@@ -106,20 +107,41 @@ def _toplevel_symbols(tree: ast.Module, lines: list[str]) -> dict[str, tuple[str
     return out
 
 
-def _followed_imports(tree: ast.Module) -> dict[str, tuple[str, str]]:
+def _absolute_module(node: ast.ImportFrom, package: str | None) -> str | None:
+    """The dotted module an ImportFrom names; relative imports resolve
+    against ``package`` (the importing module's package), and are
+    unresolvable (None) when it is unknown or too shallow."""
+    if not node.level:
+        return node.module or ""
+    if not package:
+        return None
+    parts = package.split(".")
+    if node.level - 1 >= len(parts):
+        return None
+    base = ".".join(parts[: len(parts) - (node.level - 1)])
+    return f"{base}.{node.module}" if node.module else base
+
+
+def _followed_imports(
+    tree: ast.Module, package: str | None = None
+) -> dict[str, tuple[str, str]]:
     """{local_name: (target_module, original_name)} for every ``from
     pubsub2bq_spark.functions[.X] import name`` binding anywhere in the
     module (module level or inside a function body — kernels are often
     imported lazily inside the mapInPandas bodies for executor pickling).
-    Module-wide collection is a deliberate over-approximation: a name
-    imported in one function applies to the whole module's ref
-    resolution, which at worst hashes slightly more than a symbol truly
-    uses (extra staleness, never missed staleness)."""
+    Relative imports (``from ..functions.X import name``) are resolved
+    against ``package``, the importing module's package. Module-wide
+    collection is a deliberate over-approximation: a name imported in
+    one function applies to the whole module's ref resolution, which at
+    worst hashes slightly more than a symbol truly uses (extra
+    staleness, never missed staleness)."""
     out: dict[str, tuple[str, str]] = {}
     for node in ast.walk(tree):
-        if not isinstance(node, ast.ImportFrom) or node.level:
+        if not isinstance(node, ast.ImportFrom):
             continue
-        mod = node.module or ""
+        mod = _absolute_module(node, package)
+        if mod is None:
+            continue
         if mod != FOLLOW_MODULE_PREFIX and not mod.startswith(
             FOLLOW_MODULE_PREFIX + "."
         ):
@@ -134,27 +156,30 @@ def _followed_imports(tree: ast.Module) -> dict[str, tuple[str, str]]:
 class _ModuleInfo:
     __slots__ = ("symbols", "imports")
 
-    def __init__(self, module_src: str):
+    def __init__(self, module_src: str, package: str | None):
         tree = ast.parse(module_src)
         self.symbols = _toplevel_symbols(tree, module_src.splitlines())
-        self.imports = _followed_imports(tree)
+        self.imports = _followed_imports(tree, package)
 
 
-# Parsed-module memo keyed by source text: fresh_green_keys hashes every
-# registry key and most share a handful of operator/kernel modules.
-_MODINFO_CACHE: dict[str, _ModuleInfo] = {}
+# Parsed-module memo keyed by (source text, package): fresh_green_keys
+# hashes every registry key and most share a handful of operator/kernel
+# modules.
+_MODINFO_CACHE: dict[tuple[str, str | None], _ModuleInfo] = {}
 
 
-def _modinfo(module_src: str) -> _ModuleInfo | None:
-    info = _MODINFO_CACHE.get(module_src)
+def _modinfo(module_src: str, module_name: str | None = None) -> _ModuleInfo | None:
+    package = module_name.rpartition(".")[0] if module_name else None
+    cache_key = (module_src, package)
+    info = _MODINFO_CACHE.get(cache_key)
     if info is None:
         try:
-            info = _ModuleInfo(module_src)
+            info = _ModuleInfo(*cache_key)
         except SyntaxError:
             return None
         if len(_MODINFO_CACHE) > 64:
             _MODINFO_CACHE.clear()
-        _MODINFO_CACHE[module_src] = info
+        _MODINFO_CACHE[cache_key] = info
     return info
 
 
@@ -162,6 +187,7 @@ def closure_source(
     module_src: str,
     fn_name: str,
     load_module: Callable[[str], str | None] | None = None,
+    module_name: str | None = None,
 ) -> str | None:
     """The function's source (decorators included) followed by the
     sources of every same-module top-level symbol it transitively
@@ -171,8 +197,10 @@ def closure_source(
     sorted by (module, name) and tagged with their module path.  The text
     the implementation hash covers.  None when the function is not a
     top-level def here.  ``load_module`` maps a dotted module name to its
-    source text (live tree or a historic git blob) or None."""
-    root_info = _modinfo(module_src)
+    source text (live tree or a historic git blob) or None;
+    ``module_name`` is the root module's dotted name, against whose
+    package its relative imports resolve."""
+    root_info = _modinfo(module_src, module_name)
     if root_info is None or fn_name not in root_info.symbols:
         return None
     # (module_key, name) pairs; "" is the root module.  External parts
@@ -186,7 +214,7 @@ def closure_source(
     def info_for(mod: str) -> _ModuleInfo | None:
         if mod not in infos:
             src = load_module(mod) if load_module else None
-            infos[mod] = _modinfo(src) if src is not None else None
+            infos[mod] = _modinfo(src, mod) if src is not None else None
         return infos[mod]
 
     def follow(mod: str, name: str) -> None:
@@ -254,8 +282,11 @@ def live_impl_hash(fn: Callable) -> str | None:
     entirely."""
     fn = unwrap_registered(fn)
     try:
-        module_src = inspect.getsource(inspect.getmodule(fn))
-        src = closure_source(module_src, fn.__name__, _live_module_loader)
+        module = inspect.getmodule(fn)
+        module_src = inspect.getsource(module)
+        src = closure_source(
+            module_src, fn.__name__, _live_module_loader, module.__name__
+        )
         if src is not None:
             return impl_hash_of_source(src)
         return impl_hash_of_source(inspect.getsource(fn))

@@ -264,7 +264,8 @@ def _mag_fields(diffs: np.ndarray, codes: dict) -> tuple[np.ndarray, np.ndarray]
     appended bits — the vectorized twin of `_magnitude` + ``codes[size]``
     + two write() calls per DC (r15). np.frexp's exponent IS bit_length
     for the int64 magnitudes here (exact below 2^53), and a size absent
-    from the table raises the same KeyError the dict lookup raised."""
+    from the table — including any size above 16, which no table can
+    hold — raises the same KeyError the dict lookup raised."""
     ab = np.abs(diffs)
     size = np.frexp(ab.astype(np.float64))[1].astype(np.int64)
     code_arr = np.full(17, -1, dtype=np.int64)
@@ -273,9 +274,9 @@ def _mag_fields(diffs: np.ndarray, codes: dict) -> tuple[np.ndarray, np.ndarray]
         if 0 <= s < 17:
             code_arr[s] = c
             len_arr[s] = ln
-    code_f = code_arr[size]
+    code_f = np.where(size > 16, -1, code_arr[np.minimum(size, 16)])
     if code_f.min(initial=0) < 0:
-        codes[int(size[int(np.argmin(code_f))])]  # same KeyError as scalar
+        raise KeyError(int(size[int(np.argmin(code_f))]))  # as the scalar path
     bits = np.where(diffs >= 0, diffs, diffs + (np.int64(1) << size) - 1)
     return (
         np.stack([code_f, bits], axis=1),

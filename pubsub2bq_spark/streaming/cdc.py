@@ -192,15 +192,11 @@ class CdcPipeline:
 
     def _write_sink(self, projected: DataFrame) -> None:
         """The one fallible delivery hop (tests inject transient faults
-        here). Inside an epoch the write is idempotent (deterministic
-        per-epoch file names, replay scrubs first); outside an epoch
-        (batch utilities) it degrades to a plain append."""
-        if self._current_epoch is None:
-            projected.write.mode("append").parquet(self.spec.sink_dir)
-        else:
-            self._atomic_append(
-                projected, self.spec.sink_dir, f"batch{self._current_epoch}-"
-            )
+        here). Idempotent per epoch: deterministic per-epoch file names,
+        and a replay scrubs first."""
+        self._atomic_append(
+            projected, self.spec.sink_dir, f"batch{self._current_epoch}-"
+        )
 
     def _deliver(self, messages: DataFrame, epoch_id: int) -> None:
         """One micro-batch delivery. Order of operations matters:
@@ -215,9 +211,7 @@ class CdcPipeline:
             return
         # Epoch state is scoped strictly to this delivery: ANY exception
         # escaping below (sink write, DLQ write, marker write) must not
-        # leave a stale epoch on the pipeline object — a later
-        # out-of-epoch _write_sink/_write_dlq would otherwise scrub that
-        # epoch's already-published files (ADVICE r9).
+        # leave a stale epoch on the pipeline object.
         self._current_epoch = epoch_id
         try:
             self._deliver_epoch(messages, epoch_id)
@@ -250,14 +244,11 @@ class CdcPipeline:
         self._await_backoff(nacks)
         try:
             self._write_sink(projected)
-        except SchemaMismatchError:
-            raise  # permanent: halt (never reached — project raises earlier)
         except Exception:
             # Transient delivery failure → NACK: log one failed attempt per
             # message and fail the batch so offsets stay uncommitted and
-            # the source redelivers after the backoff. (_deliver's finally
-            # resets the epoch so batch utilities outside the epoch see
-            # plain-append mode.)
+            # the source redelivers after the backoff. (A schema mismatch
+            # is permanent, but project_to_sink_schema raises it above.)
             self._record_nacks(deliverable)
             raise
 
@@ -272,7 +263,7 @@ class CdcPipeline:
             if ex.limit(1).count() > 0:
                 self._to_dlq(ex, reason="delivery_failed")
 
-        if corrupt.isStreaming is False and corrupt.limit(1).count() > 0:
+        if corrupt.limit(1).count() > 0:
             self._to_dlq(
                 corrupt.select("data", "ordering_key", "attributes", "ts_ms"),
                 reason="schema_validation_failed",
@@ -300,26 +291,28 @@ class CdcPipeline:
             "data", "ordering_key", "attributes", "ts_ms",
             "dlq_reason", "delivery_attempts",
         )
-        if self._current_epoch is None:
-            rows.write.mode("append").parquet(self.spec.dlq_dir)
-        else:
-            # Same exactly-once discipline as the sink: one deterministic
-            # prefix per (epoch, reason), replay scrubs before rewriting.
-            self._atomic_append(
-                rows, self.spec.dlq_dir, f"batch{self._current_epoch}-{reason}-"
-            )
+        # Same exactly-once discipline as the sink: one deterministic
+        # prefix per (epoch, reason), replay scrubs before rewriting.
+        self._atomic_append(
+            rows, self.spec.dlq_dir, f"batch{self._current_epoch}-{reason}-"
+        )
 
     # ---- run ---------------------------------------------------------------
-    def run_available_now(self) -> None:
-        """Process everything currently in the spool and stop — the
-        deterministic test trigger (Trigger.AvailableNow)."""
-        q = (
+    def _start(self, **trigger):
+        """Start the delivery query: every micro-batch goes through
+        _deliver, offsets checkpoint under spec.checkpoint_dir."""
+        return (
             self.message_stream()
             .writeStream.foreachBatch(self._deliver)
             .option("checkpointLocation", self.spec.checkpoint_dir)
-            .trigger(availableNow=True)
+            .trigger(**trigger)
             .start()
         )
+
+    def run_available_now(self) -> None:
+        """Process everything currently in the spool and stop — the
+        deterministic test trigger (Trigger.AvailableNow)."""
+        q = self._start(availableNow=True)
         try:
             q.awaitTermination()
         except Exception as ex:  # surface the halt as the reference does:
@@ -336,13 +329,7 @@ class CdcPipeline:
         kill-mid-batch comes from the epoch-idempotent delivery
         (deterministic per-epoch file names + delivery-commit marker),
         exercised by tests/test_cdc_golden.py's soak test."""
-        return (
-            self.message_stream()
-            .writeStream.foreachBatch(self._deliver)
-            .option("checkpointLocation", self.spec.checkpoint_dir)
-            .trigger(processingTime=interval)
-            .start()
-        )
+        return self._start(processingTime=interval)
 
     # ---- taps ---------------------------------------------------------------
     def read_sink(self) -> DataFrame:

@@ -20,8 +20,7 @@ Method: spool the full `events` table as Debezium-style envelopes
   offered load this measures.
 * ``batch_p50_sec``  — median non-empty micro-batch latency (the
   steady-state freshness a consumer of the sink table observes).
-* ``busy_sec``       — the gate figure: total busy seconds for the
-  fixed workload, drift-normalizable like any other bench timing.
+* ``busy_sec``       — total busy seconds for the fixed workload.
 
 At 100 TB: the spool becomes a Kafka/Pub/Sub connector and
 ``maxFilesPerTrigger`` becomes ``maxOffsetsPerTrigger``; every stage

@@ -110,7 +110,8 @@ def source_at_commit(commit: str, relpath: str, fn_name: str) -> str | None:
         blob = _git("show", f"{commit}:{relpath}")
     except subprocess.CalledProcessError:
         return None
-    return closure_source(blob, fn_name, _loader_at_commit(commit))
+    module_name = relpath[: -len(".py")].replace("/", ".")
+    return closure_source(blob, fn_name, _loader_at_commit(commit), module_name)
 
 
 def fn_only_source_at_commit(commit: str, relpath: str, fn_name: str) -> str | None:

@@ -1,351 +1,16 @@
-"""bench.py regression-gate semantics: ratio on the variable component
-for fixed-cost-decomposed keys (stream startup / seeding-chain job
-overhead), plus an absolute-delta noise floor so sub-noise wiggles
-(especially after the fixed-cost subtraction) cannot flag."""
+"""bench.py's stdout contract (bounded chunk lines, totals last), its
+jsonl record, and the job/stage counter report that replaced the
+wall-clock regression gate."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 import bench
-
-
-def test_batch_key_needs_ratio_and_absolute_delta():
-    assert bench._gate_flags("groupby_agg", 1.2, 0.5)        # 2.4x, +0.7s
-    assert not bench._gate_flags("groupby_agg", 0.45, 0.2)   # 2.25x but +0.25s
-    assert not bench._gate_flags("groupby_agg", 1.2, 1.0)    # 1.2x
-
-
-def test_stream_key_gates_on_per_batch_component():
-    key = "transform_with_state"
-    fixed = bench.FIXED_COST[key]
-    # +0.8s per-batch: big ratio but under the 1s decomposed noise floor
-    assert not bench._gate_flags(key, fixed + 1.6, fixed + 0.8)
-    # +1.5s per-batch at >1.5x: a real regression
-    assert bench._gate_flags(key, fixed + 2.5, fixed + 1.0)
-    # startup-only growth with per-batch constant: never flags
-    assert not bench._gate_flags(key, fixed + 0.9, fixed + 0.85)
-
-
-def test_gate_ratio_subtracts_fixed_cost():
-    key = "stream_replay"
-    fixed = bench.FIXED_COST[key]
-    assert abs(bench._gate_ratio(key, fixed + 2.0, fixed + 1.0) - 2.0) < 1e-9
-
-
-def test_seeded_index_key_gates_on_variable_component():
-    """VERDICT r5 #4: ann_ivf_kmeans's ~4s seeding-chain overhead is a
-    per-op constant — growth inside it must not flag, growth in the
-    data-dependent remainder must."""
-    key = "ann_ivf_kmeans"
-    fixed = bench.FIXED_COST[key]
-    # fixed-overhead jitter with variable part constant: never flags
-    assert not bench._gate_flags(key, fixed + 0.75, fixed + 0.7)
-    # variable part 0.7 -> 2.2 (3.1x, +1.5s): a real regression
-    assert bench._gate_flags(key, fixed + 2.2, fixed + 0.7)
-    # a prior-round total BELOW the fixed estimate clamps but must not
-    # produce a flag from a modest absolute move
-    assert not bench._gate_flags(key, fixed + 0.5, fixed - 0.3)
-
-
-def test_parse_bench_tail_recovers_truncated_capture():
-    """r7 postmortem: the driver's tail capture can lose the front of
-    the result line (parsed: null). The queries dict must still be
-    recoverable from the tail string so the gate never runs blind."""
-    tail = (
-        ' "headline_queries_total_wall", "value": 80.917, "unit": "sec",'
-        ' "queries": {"tpch_q1": 0.228, "semdedup": 5.438},'
-        ' "sf": 0.1, "calibration_range_sum_sec": 0.179}\n'
-    )
-    got = bench._parse_bench_tail(tail)
-    assert got is not None
-    assert got["queries"] == {"tpch_q1": 0.228, "semdedup": 5.438}
-    assert got["value"] == 80.917 and got["sf"] == 0.1
-
-
-def test_parse_bench_tail_rejects_garbage():
-    assert bench._parse_bench_tail("no json here") is None
-    assert bench._parse_bench_tail('"queries": {broken') is None
-
-
-def test_load_prior_never_returns_empty_queries():
-    loaded = bench.load_prior()
-    # Repo carries BENCH_r01..r07; r06/r07 have parsed:null but a
-    # recoverable tail, so load_prior must yield a non-empty dict.
-    assert loaded is not None
-    name, prior = loaded
-    assert prior.get("queries"), f"{name} loaded without queries"
-
-
-def test_load_prior_recovers_when_parsed_is_queryless_dict(tmp_path, monkeypatch):
-    """A truncated capture can still parse to a dict WITHOUT queries —
-    the tail fallback must read the wrapper's tail, not the unwrapped
-    parsed dict (which has none)."""
-    import json
-    import os
-
-    tail = (
-        '"value": 12.5, "unit": "sec", "queries": {"tpch_q1": 0.5},'
-        ' "sf": 0.1}\n'
-    )
-    wrapped = {"parsed": {"value": 12.5}, "tail": tail, "n": 1}
-    with open(tmp_path / "BENCH_r42.json", "w") as f:
-        json.dump(wrapped, f)
-    real_dirname = os.path.dirname
-
-    monkeypatch.setattr(
-        bench.os.path, "dirname", lambda p: str(tmp_path)
-    )
-    try:
-        loaded = bench.load_prior()
-    finally:
-        monkeypatch.setattr(bench.os.path, "dirname", real_dirname)
-    assert loaded is not None
-    name, prior = loaded
-    assert name == "BENCH_r42.json"
-    assert prior["queries"] == {"tpch_q1": 0.5}
-
-
-def test_session_drift_median_and_fallbacks():
-    """Uniform session drift is the median raw ratio over stable common
-    queries; decomposed keys and tiny priors are excluded; <8 samples
-    means no correction; the estimate clamps at [0.5, 3]."""
-    prior = {f"q{i}": 1.0 for i in range(10)}
-    # uniform 1.4x session
-    now = {f"q{i}": 1.4 for i in range(10)}
-    assert abs(bench._session_drift(now, prior) - 1.4) < 1e-9
-    # decomposed keys never contribute to the estimate
-    key = "ann_ivf_kmeans"
-    now2 = dict(now, **{key: 100.0})
-    prior2 = dict(prior, **{key: 1.0})
-    assert abs(bench._session_drift(now2, prior2) - 1.4) < 1e-9
-    # sub-0.1s priors are excluded (noisy denominators)
-    prior3 = dict(prior, q0=0.05)
-    assert abs(bench._session_drift(now, prior3) - 1.4) < 1e-9
-    # too few samples: no correction
-    assert bench._session_drift({"q0": 2.0}, {"q0": 1.0}) == 1.0
-    # clamp: a 10x "drift" is not drift
-    now4 = {f"q{i}": 10.0 for i in range(10)}
-    assert bench._session_drift(now4, prior) == 3.0
-
-
-def test_drift_deflation_kills_uniform_slowdown_flags():
-    """The r8 false-flag shape: a 1.4x-slower capture session turned
-    fixed-cost-dominated keys into 8x 'variable regressions'. With the
-    session median divided out, uniform slowdown never flags — while a
-    genuinely localized regression still does."""
-    # Uses the stream-startup key: its fixed term is large and stable
-    # (the r9 quantizer cache shrank the seeding-family constants, so a
-    # 1.3x drift on fixed+0.16 no longer clears the decomposed abs
-    # floor for those keys — which is correct gate behavior, but the
-    # property under test here needs a fixed term big enough that the
-    # drift-amplified wiggle would flag without deflation).
-    key = "transform_with_state"
-    fixed = bench.FIXED_COST[key]
-    was, now = fixed + 0.16, (fixed + 0.16) * 1.3  # raw 1.3x drift
-    assert bench._gate_flags(key, now, was)            # undeflated: flags
-    assert not bench._gate_flags(key, now, was, 1.4)   # deflated: clean
-    # a real 4x variable-component regression ON the slow session
-    # (whole observation carries the 1.4x) flags THROUGH the drift
-    assert bench._gate_flags(key, (fixed + 3.0) * 1.4, fixed + 0.7, 1.4)
-
-
-def test_drift_warning_fires_only_when_no_probe_corroborates():
-    """The calibration cross-check: a slow box (some probe moved too)
-    stays quiet, a median NO probe can explain warns, and a missing
-    calibration pair yields a weaker warning — never silence (ADVICE
-    r8: a truncated prior must not read as corroborated)."""
-    C = "calibration_range_sum_sec"
-    # box slowdown: median 1.4x AND probe 1.4x — corroborated, quiet
-    assert bench._drift_warning(1.4, {C: 0.25}, {C: 0.179}) is None
-    # the r8 shape: median 1.38x, probe FASTER (0.15 vs 0.179) — warn
-    w = bench._drift_warning(1.38, {C: 0.15}, {C: 0.179})
-    assert w and "UNEXPLAINED UNIFORM SLOWDOWN" in w
-    # small drift never warns regardless of the probe
-    assert bench._drift_warning(1.1, {C: 0.15}, {C: 0.179}) is None
-    # no calibration pair + large drift: WEAKER warning, not silence
-    w2 = bench._drift_warning(2.0, None, {C: 0.179})
-    assert w2 and "UNVERIFIABLE DRIFT" in w2
-    w3 = bench._drift_warning(2.0, {C: 0.15}, None)
-    assert w3 and "UNVERIFIABLE DRIFT" in w3
-    # no pair + small drift: still quiet
-    assert bench._drift_warning(1.1, None, None) is None
-
-
-def test_drift_warning_any_leg_corroborates():
-    """Multi-leg corroboration (r9): the r8/r9 box slowdown left the
-    pure-compute leg flat while scan/scheduling legs moved — ANY common
-    leg moving with the median must quiet the warning."""
-    now = {
-        "calibration_range_sum_sec": 0.15,   # flat
-        "calibration_jobs_sec": 2.1,          # 1.4x — co-moved
-    }
-    prior = {
-        "calibration_range_sum_sec": 0.179,
-        "calibration_jobs_sec": 1.5,
-    }
-    assert bench._drift_warning(1.45, now, prior) is None
-    # but if every common leg is flat, warn — even when the now-side has
-    # extra legs the prior lacks
-    now_flat = {
-        "calibration_range_sum_sec": 0.15,
-        "calibration_jobs_sec": 1.5,
-        "calibration_scan_agg_sec": 0.3,     # no prior counterpart
-    }
-    w = bench._drift_warning(1.45, now_flat, prior)
-    assert w and "UNEXPLAINED UNIFORM SLOWDOWN" in w
-
-
-def test_parse_bench_tail_recovers_front_truncated_capture():
-    """r8 postmortem: the driver's tail can ALSO lose the front of the
-    queries dict itself (tail starts mid-pair, the '"queries"' key is
-    gone). The well-formed pairs must be harvested and the recovery
-    marked partial."""
-    tail = (
-        't": 0.458, "filter_pred": 0.198, "groupby_agg": 0.348,'
-        ' "join_inner": 0.281, "join_broadcast": 0.354, "join_asof": 0.303,'
-        ' "count_distinct": 0.61, "window_rank": 0.201,'
-        ' "topk_per_group": 0.342, "semdedup": 5.438},'
-        ' "sf": 0.1, "calibration_range_sum_sec": 0.151}\n'
-    )
-    got = bench._parse_bench_tail(tail)
-    assert got is not None
-    assert got["partial_tail"] is True
-    # the cut-off first pair ('t": 0.458') must NOT appear
-    assert "t" not in got["queries"]
-    assert got["queries"]["filter_pred"] == 0.198
-    assert got["queries"]["semdedup"] == 5.438
-    assert len(got["queries"]) == 9
-    assert got["sf"] == 0.1
-    assert got["calibration_range_sum_sec"] == 0.151
-    # scalar fields never leak into queries
-    assert "sf" not in got["queries"]
-
-
-def test_load_prior_prefers_latest_recoverable_capture(tmp_path, monkeypatch):
-    """With front-truncation recovery, a newest capture whose `parsed`
-    is null but whose tail holds the queries dict is usable — the gate
-    must compare to the LATEST round, not silently fall back a round.
-
-    VERDICT r9 #1: asserted against a synthetic directory, NOT the live
-    repo — the driver drops a new BENCH_r{N}.json after every round, so
-    any literal-filename assertion on the real tree re-breaks each
-    round."""
-    import json
-    import os
-
-    # Older round: fully parsed, healthy.
-    with open(tmp_path / "BENCH_r07.json", "w") as f:
-        json.dump(
-            {
-                "parsed": {
-                    "queries": {f"q{i}": 1.0 for i in range(60)},
-                    "sf": 0.1,
-                    "calibration_range_sum_sec": 0.179,
-                }
-            },
-            f,
-        )
-    # Newest round: parsed:null, queries only recoverable from the tail
-    # (front-truncated — starts mid-pair, '"queries"' key gone).
-    tail = (
-        't": 0.458, '
-        + ", ".join(f'"q{i}": 0.5' for i in range(60))
-        + ', "sf": 0.1, "calibration_range_sum_sec": 0.151}\n'
-    )
-    with open(tmp_path / "BENCH_r08.json", "w") as f:
-        json.dump({"parsed": None, "tail": tail, "n": 1}, f)
-    monkeypatch.setattr(bench.os.path, "dirname", lambda p: str(tmp_path))
-
-    loaded = bench.load_prior()
-    assert loaded is not None
-    name, prior = loaded
-    # the recoverable NEWEST file wins, not the older fully-parsed one
-    assert name == "BENCH_r08.json"
-    assert len(prior["queries"]) > 50
-    assert prior.get("calibration_range_sum_sec") == 0.151
-    assert prior.get("partial_tail") is True
-
-
-def test_load_prior_on_live_repo_is_latest_round_present():
-    """The live-tree companion to the synthetic test above: whatever
-    BENCH_r*.json files the driver has dropped, load_prior must return
-    a usable queries dict from the highest-numbered recoverable one —
-    asserted structurally, never by literal filename."""
-    import glob
-    import os
-    import re
-
-    loaded = bench.load_prior()
-    assert loaded is not None
-    name, prior = loaded
-    assert prior.get("queries")
-    root = os.path.dirname(os.path.abspath(bench.__file__))
-    rounds = sorted(
-        int(m.group(1))
-        for p in glob.glob(os.path.join(root, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    )
-    got = int(re.search(r"BENCH_r(\d+)\.json$", name).group(1))
-    # must be one of the rounds present, and no LATER round may be
-    # recoverable (walking back from the newest is only legal across
-    # genuinely unusable captures)
-    assert got in rounds
-    for later in (r for r in rounds if r > got):
-        path = os.path.join(root, f"BENCH_r{later:02d}.json")
-        import json
-
-        with open(path) as f:
-            wrapper = json.load(f)
-        parsed = wrapper.get("parsed") if "queries" not in wrapper else wrapper
-        has_parsed_queries = isinstance(parsed, dict) and parsed.get("queries")
-        has_tail = isinstance(wrapper.get("tail"), str) and (
-            bench._parse_bench_tail(wrapper["tail"]) is not None
-        )
-        assert not (has_parsed_queries or has_tail), (
-            f"BENCH_r{later:02d}.json is recoverable but load_prior chose {name}"
-        )
-
-
-def test_drift_explanation_downgrades_banner(tmp_path, monkeypatch):
-    """An evidence-cited DRIFT_EXPLANATIONS entry keyed to the exact
-    prior capture downgrades UNEXPLAINED→EXPLAINED (and the caller's
-    machine-readable suspect flag with it); any other prior keeps the
-    banner. The entry dies automatically with a new prior capture."""
-    import json
-    import os
-
-    tail = (
-        ' "headline_queries_total_wall", "value": 10.0, "unit": "sec",'
-        ' "queries": {' + ", ".join(f'"q{i}": 1.0' for i in range(10)) + '},'
-        ' "sf": 0.1, "calibration_range_sum_sec": 0.179}\n'
-    )
-    with open(tmp_path / "BENCH_r98.json", "w") as f:
-        json.dump({"parsed": None, "tail": tail, "n": 1}, f)
-    os.makedirs(tmp_path / "docs", exist_ok=True)
-    real_dirname = os.path.dirname
-    monkeypatch.setattr(bench.os.path, "dirname", lambda p: str(tmp_path))
-    try:
-        timings = {f"q{i}": 1.5 for i in range(10)}  # uniform 1.5x drift
-        calib = {"calibration_range_sum_sec": 0.179}  # flat probe
-        w = bench.compare_to_prior_rounds(timings, 15.0, {}, None, calib)
-        assert w and "UNEXPLAINED" in w
-        monkeypatch.setitem(
-            bench.DRIFT_EXPLANATIONS, "BENCH_r98.json", "measured: test"
-        )
-        w2 = bench.compare_to_prior_rounds(timings, 15.0, {}, None, calib)
-        assert w2 is None
-        report = (tmp_path / "docs" / "BENCH_COMPARE.md").read_text()
-        assert "DRIFT EXPLAINED (measured)" in report
-    finally:
-        monkeypatch.setattr(bench.os.path, "dirname", real_dirname)
+from tests.conftest import SF_SMOKE
 
 
 # ---------------------------------------------------------------------------
-# Lossless chunked emission (judge r13 task #1): every stdout line bounded
-# under the driver's ~2 KB tail capture, totals line LAST, and a tail slice
-# + docs/bench_runs.jsonl join reconstructs the complete record.
+# Lossless chunked emission: every stdout line bounded under a ~2 KB tail
+# capture, totals line LAST, complete record in docs/bench_runs.jsonl.
 # ---------------------------------------------------------------------------
 
 
@@ -406,42 +71,6 @@ def test_emit_lines_rejects_oversized_line():
         bench._emit_lines(result)
 
 
-def test_tail_capture_reconstructs_via_full_record(tmp_path, monkeypatch):
-    """Simulate the driver: keep only the LAST 2000 chars of stdout.
-    The final compact line survives whole; run_id joins back to the
-    bench_runs.jsonl record for the complete queries dict."""
-    import json
-
-    runs = tmp_path / "bench_runs.jsonl"
-    monkeypatch.setattr(bench, "_bench_runs_path", lambda: str(runs))
-    result = _synthetic_result()
-    bench._record_full_run(result)
-    stdout = "\n".join(bench._emit_lines(result))
-    tail = stdout[-2000:]
-    recovered = bench._parse_bench_tail(tail)
-    assert recovered is not None
-    assert recovered["queries"] == result["queries"]
-    assert recovered.get("value") == 123.456
-    assert "partial_tail" not in recovered
-
-
-def test_tail_capture_degrades_to_chunks_without_record(tmp_path, monkeypatch):
-    """No jsonl record (e.g. clobbered by a local run): the chunk lines
-    inside the tail still yield a partial-but-parsed queries dict."""
-    runs = tmp_path / "bench_runs.jsonl"
-    monkeypatch.setattr(bench, "_bench_runs_path", lambda: str(runs))
-    result = _synthetic_result()
-    stdout = "\n".join(bench._emit_lines(result))
-    tail = stdout[-2000:]
-    recovered = bench._parse_bench_tail(tail)
-    assert recovered is not None
-    assert recovered["queries"]  # whatever chunks fit the window
-    assert recovered["partial_tail"] is True
-    # Whatever was recovered is a subset with correct values.
-    for k, v in recovered["queries"].items():
-        assert result["queries"][k] == v
-
-
 def test_record_full_run_prunes(tmp_path, monkeypatch):
     runs = tmp_path / "bench_runs.jsonl"
     monkeypatch.setattr(bench, "_bench_runs_path", lambda: str(runs))
@@ -454,3 +83,53 @@ def test_record_full_run_prunes(tmp_path, monkeypatch):
     # Oldest pruned, newest kept and loadable.
     assert bench._load_full_run("rid.0") is None
     assert bench._load_full_run(f"rid.{bench.BENCH_RUNS_KEEP + 4}") is not None
+
+
+# ---------------------------------------------------------------------------
+# Job/stage counter report.
+# ---------------------------------------------------------------------------
+
+
+def test_counter_changes_report_only_stable_comparable_keys():
+    first = {"q_same": [2, 3], "q_more_jobs": [3, 4], "q_flaky": [5, 6], "q_new": [1, 1]}
+    second = dict(first, q_flaky=[6, 7])
+    stable, unstable = bench.stable_counters(first, second)
+    assert unstable == ["q_flaky"]
+    assert "q_flaky" not in stable
+
+    prior = {"q_same": [2, 3], "q_more_jobs": [2, 4], "q_flaky": [1, 1]}
+    runs = [
+        {"run_id": "old", "sf": 0.1, "cpus": 4, "counters": {"q_same": [9, 9]}},
+        {"run_id": "match", "sf": 0.1, "cpus": 4, "counters": prior},
+        # newer, but another core count / scale: never the baseline
+        {"run_id": "c32", "sf": 0.1, "cpus": 32, "counters": {"q_same": [7, 7]}},
+        {"run_id": "sf1", "sf": 0.01, "cpus": 4, "counters": {"q_same": [7, 7]}},
+        # newer, same sf and cpus, but from before counters were recorded
+        {"run_id": "legacy", "sf": 0.1, "queries": {"q_same": 1.0}},
+    ]
+    changed = bench.counter_changes(stable, runs, 0.1, 4)
+    assert len(changed) == 1
+    assert changed[0].startswith("q_more_jobs: jobs 2→3, stages 4→4")
+    assert "match" in changed[0]
+    # a record at another core count is not a baseline at all
+    assert bench.counter_changes(stable, runs[2:3], 0.1, 4) == []
+    assert bench.counter_changes(stable, [], 0.1, 4) == []
+
+
+def test_run_counted_counts_are_stable_in_session(spark):
+    """The bench's own helper at sf0.001: after a warm-up run (artifact
+    builds, as in the bench), two runs of a plain query and of a
+    session-artifact consumer report the same job and stage counts."""
+    from pubsub2bq_spark.registry import all_queries
+
+    registry = all_queries()
+    for key in ("tpch_q1", "ann_ivf_kmeans"):
+        bench.run_counted(spark, registry, key, SF_SMOKE)
+        (t1, c1), (t2, c2) = (
+            bench.run_counted(spark, registry, key, SF_SMOKE) for _ in range(2)
+        )
+        assert t1 > 0 and t2 > 0
+        assert c1 == c2, (key, c1, c2)
+        jobs, stages = c1
+        assert 1 <= jobs <= stages, (key, c1)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

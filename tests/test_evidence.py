@@ -300,6 +300,42 @@ def test_closure_follows_lazy_function_body_imports():
     assert "def kern" in src and "def deep" in src
 
 
+_OP_MODULE_RELATIVE = '''
+from ..functions.fakekern import kern
+
+def operator(spark, sf_dir):
+    from ..functions import otherkern
+    return kern(spark) + otherkern.deep(1)
+'''
+
+
+def test_closure_follows_relative_imports():
+    """``from ..functions.X import name`` resolves against the importing
+    module's package, so a kernel edit behind a relative import changes
+    the caller's closure hash exactly like an absolute import does."""
+    from pubsub2bq_spark.evidence import closure_source, impl_hash_of_source
+
+    op = "pubsub2bq_spark.operators.fakeop"
+    mods_v1 = {
+        "pubsub2bq_spark.functions.fakekern": _KERNEL_V1,
+        "pubsub2bq_spark.functions.otherkern": _DEEP_V1,
+    }
+    src1 = closure_source(_OP_MODULE_RELATIVE, "operator", _loader(mods_v1), op)
+    assert "def kern" in src1 and "def deep" in src1
+    mods_v2 = dict(mods_v1)
+    mods_v2["pubsub2bq_spark.functions.fakekern"] = _KERNEL_V2
+    src2 = closure_source(_OP_MODULE_RELATIVE, "operator", _loader(mods_v2), op)
+    assert impl_hash_of_source(src2) != impl_hash_of_source(src1)
+    # the module imported whole (`from ..functions import otherkern`)
+    mods_v3 = dict(mods_v1)
+    mods_v3["pubsub2bq_spark.functions.otherkern"] = _DEEP_V2
+    src3 = closure_source(_OP_MODULE_RELATIVE, "operator", _loader(mods_v3), op)
+    assert impl_hash_of_source(src3) != impl_hash_of_source(src1)
+    # without the importing module's name a relative import cannot resolve
+    bare = closure_source(_OP_MODULE_RELATIVE, "operator", _loader(mods_v1))
+    assert "def kern" not in bare
+
+
 def test_closure_without_loader_is_same_module_only():
     """Back-compat: no loader -> the pre-r15 same-module behavior."""
     from pubsub2bq_spark.evidence import closure_source

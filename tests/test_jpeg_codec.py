@@ -111,6 +111,28 @@ class TestJpegCodec:
         with pytest.raises(ValueError):
             decode_jpeg(data[:cut] + b"\xff\xd9")
 
+    def test_mag_fields_oversize_dc_diff_raises_keyerror(self):
+        # A DC diff of magnitude >= 2^16 has size >= 17, which no Huffman
+        # table can hold: the vectorized path must raise the same KeyError
+        # as the scalar `codes[size]` lookup, never an IndexError.
+        from pubsub2bq_spark.functions.jpeg_codec import (
+            _DC_BITS,
+            _DC_VALS,
+            _canonical_codes,
+            _mag_fields,
+        )
+
+        codes = _canonical_codes(_DC_BITS, _DC_VALS)
+        full = {s: (0, s + 1) for s in range(17)}  # every legal size
+        for diff, table, size in (
+            (1 << 16, codes, 17),
+            (-(1 << 20), full, 21),
+            (2048, codes, 12),  # legal size, absent from the baseline table
+        ):
+            with pytest.raises(KeyError) as ei:
+                _mag_fields(np.array([0, 5, diff], dtype=np.int64), table)
+            assert ei.value.args == (size,)
+
     def test_decode_image_dispatches_jpeg(self):
         from pubsub2bq_spark.functions.multimodal import (
             decode_image,

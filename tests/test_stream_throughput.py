@@ -9,7 +9,6 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 
-import bench
 from pubsub2bq_spark.operators.cdc_pipeline import read_events_sink
 from pubsub2bq_spark.streaming.throughput import measure_stream_throughput
 from pubsub2bq_spark.tables import load
@@ -36,44 +35,3 @@ def test_measurement_is_multi_batch_with_sane_figures(measured):
     assert measured["rows_per_sec"] > 0
     assert 0 < measured["batch_p50_sec"] < 60
 
-
-def test_bench_compare_section_gates_on_busy_seconds():
-    prior = {"stream_throughput_busy_sec": 5.0}
-    now = {
-        "stream_throughput_busy_sec": 5.2,
-        "stream_throughput_rows": 100000,
-        "stream_throughput_rows_per_sec": 19000.0,
-        "stream_throughput_batch_p50_sec": 0.6,
-    }
-    lines, flag = bench._stream_throughput_section(prior, now, drift=1.0)
-    assert not flag and any("ok" in ln for ln in lines)
-    # real regression: ratio > 1.5 and delta beyond the 1s jitter floor
-    now["stream_throughput_busy_sec"] = 9.0
-    lines, flag = bench._stream_throughput_section(prior, now, drift=1.0)
-    assert flag
-    # a slow box (drift 2x) must absolve the same raw measurement
-    lines, flag = bench._stream_throughput_section(prior, now, drift=2.0)
-    assert not flag
-    # no prior figure → baseline round, never a flag
-    lines, flag = bench._stream_throughput_section({}, now, drift=1.0)
-    assert not flag and any("baseline round" in ln for ln in lines)
-    # leg absent from this run → empty section
-    lines, flag = bench._stream_throughput_section(prior, {}, drift=1.0)
-    assert lines == [] and not flag
-
-
-def test_tail_recovery_harvests_stream_scalars_not_as_queries():
-    tail = (
-        ' "headline_queries_total_wall", "value": 80.9, "unit": "sec",'
-        ' "queries": {"tpch_q1": 0.228, "stream_throughput": 4.9},'
-        ' "sf": 0.1, "calibration_range_sum_sec": 0.179,'
-        ' "stream_throughput_busy_sec": 4.931,'
-        ' "stream_throughput_rows_per_sec": 20279.9}\n'
-    )
-    got = bench._parse_bench_tail(tail)
-    assert got is not None
-    assert got["stream_throughput_busy_sec"] == 4.931
-    assert got["stream_throughput_rows_per_sec"] == 20279.9
-    # the scalar fields never leak into the queries dict; a genuine
-    # queries entry named stream_throughput survives as a query
-    assert got["queries"] == {"tpch_q1": 0.228, "stream_throughput": 4.9}
