@@ -133,3 +133,18 @@ def test_run_counted_counts_are_stable_in_session(spark):
         jobs, stages = c1
         assert 1 <= jobs <= stages, (key, c1)
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_ivf_kmeans_cold_build_job_count(spark):
+    """A cold ann_ivf_kmeans run (index build plus search) stays within
+    24 Spark jobs: the k-means|| candidates, weights, seeds and cells
+    are driver-held, so jobs run only for passes over the corpus. The
+    build that ran the bounded steps as Spark jobs took 52."""
+    from pubsub2bq_spark.registry import all_queries
+    from pubsub2bq_spark.tables import clear_session_artifacts
+
+    clear_session_artifacts()
+    _seconds, (jobs, stages) = bench.run_counted(
+        spark, all_queries(), "ann_ivf_kmeans", SF_SMOKE
+    )
+    assert 1 <= jobs <= 24, (jobs, stages)

@@ -16,6 +16,7 @@ from pubsub2bq_spark.streaming.reconcile import (
     split_corrupt,
     unwrap_envelope,
 )
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 TOPIC = T.StructType(
     [
@@ -746,6 +747,56 @@ class TestProbeSearchBitExact:
             tuple(r) for r in _ivfk_search(dist, n_members=500).collect()
         }
         assert kernel == expr and kernel
+
+
+class TestKppSeedDigests:
+    """k-means|| seeds and the ann_ivf_kmeans rows, pinned by SHA-256
+    of their sorted reprs. The digests were computed with the Spark
+    build (candidate rounds, weighting and mini-Lloyd as Spark jobs)
+    that preceded the driver-held one, so they pin that the driver-side
+    rounds and re-clustering change no bit of any seed or result."""
+
+    DIGESTS = {
+        SF_SMOKE: {
+            (16, 32): "9b9967685deaa36c7e9252a745bf0be4efcbb90d9a5cb8b8d757cbee8b3601a8",
+            (8, 16): "f706118757cd1527b4d3bc10aa4a1fc1439a143e9f54a022b537b3ecb3320ef3",
+            "ann_ivf_kmeans": "b2f6ec3a593678b952923efb0b985a1f1605661256e018f93a1c8f73cae062df",
+        },
+        SF_CORRECT: {
+            (16, 32): "2da02bfd25e278dafb969d4f3c2ca28865160bf2c558ad268e29a83fe8848b47",
+            (8, 16): "20f0b962aab6da1ed270aba573538a279b187f25a9c6920832d031debe82f65e",
+            "ann_ivf_kmeans": "f3a4caaf8804f545b50fe4dad6a8d07bbc3927feb6f27136fe185eb7932bd6f9",
+        },
+    }
+
+    @staticmethod
+    def _digest(rows) -> str:
+        import hashlib
+
+        text = "\n".join(repr(r) for r in sorted(rows))
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    @pytest.mark.parametrize("sf", sorted(DIGESTS))
+    def test_seeds_and_rows_match_pinned_digests(self, spark, sf):
+        from pubsub2bq_spark.operators.llm_similarity import _dvec
+        from pubsub2bq_spark.operators.ml_ops import _kpp_seeds
+        from pubsub2bq_spark.registry import all_queries
+        from pubsub2bq_spark.tables import load
+
+        want = self.DIGESTS[sf]
+        v = load(spark, sf, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("v")
+        )
+        for k, l in ((16, 32), (8, 16)):
+            seeds = [(r.cid, tuple(r.c)) for r in _kpp_seeds(v, k=k, l=l).collect()]
+            assert len(seeds) == k
+            assert self._digest(seeds) == want[(k, l)], (sf, k, l)
+        rows = [
+            tuple(r)
+            for r in all_queries()["ann_ivf_kmeans"].spark(spark, sf).collect()
+        ]
+        assert rows
+        assert self._digest(rows) == want["ann_ivf_kmeans"], sf
 
 
 class TestJaccardBlockKernel:
