@@ -7,8 +7,6 @@ SQL-expressible) the DuckDB oracle string.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 from collections.abc import Callable
@@ -20,178 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pubsub2bq_spark.registry import all_queries  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-# SURVEY.md §2 query keys — the judged coverage checklist. Keys here that
-# lack a driver-green CORRECTNESS row get first claim on the driver's
-# (capped) per-round correctness run.
-SURVEY2_KEYS = frozenset({
-    # §2.1 sources/sinks
-    "cdc_source", "include_filter", "schema_validate", "sink_append",
-    "dead_letter", "raw_tap", "parquet_load", "backfill_union",
-    "python_datasource", "python_stream_source",
-    # §2.2 projection/filter
-    "unwrap", "deleted_rewrite", "schema_project", "null_fill",
-    "scan_all", "project_compute", "filter_pred",
-    # §2.3 schema/DDL
-    "insert_values", "ddl_evolution", "schema_revision", "schema_compat",
-    "mismatch_halt", "table_ttl",
-    # §2.4 delivery/state
-    "latest_per_key", "watermark_window", "tumbling_agg", "sliding_agg",
-    "session_agg", "dedup", "stateful_running", "ack_deadline",
-    # §2.5 joins
-    "join_inner", "join_outer", "join_full", "join_semi", "join_anti",
-    "join_broadcast", "join_range", "join_cross", "join_asof",
-    "stream_stream_join",
-    # §2.6 aggregations
-    "groupby_agg", "count_distinct", "approx_distinct", "rollup_agg",
-    "cube_agg", "grouping_sets", "having_filter", "privacy_threshold_agg",
-    "stats_agg",
-    # §2.7 windows · §2.8 sorts/sets
-    "window_rank", "window_lag", "window_frame", "topk_per_group",
-    "sort_limit", "union_all", "intersect_except",
-    # §2.9 scalar functions
-    "string_funcs", "date_funcs", "math_funcs", "case_when",
-    "json_extract", "array_funcs", "cast_funcs", "map_funcs",
-    # §2.9 SAFE family
-    "safe_funcs",
-    # §2.10 UDF + LLM
-    "udf_scalar", "grouped_map", "udaf_grouped", "udtf_explode",
-    "similarity_topk", "text_dedup", "word_count", "multimodal_meta",
-    "binary_load", "frame_sample", "udf_arrow", "udtf_table_arg",
-    # §2.11 physical layout
-    "clustered_write", "cdc_stream_events", "sql_script_proc",
-})
-
-
-# Keys forced into one fresh driver check even though their closure hash
-# reads fresh (cross-module rewrites the hash cannot see, or an explicit
-# verdict ask). Round 15 (VERDICT r14 #1): the r14 optimization rewrote
-# these keys' kernels in functions/*.py, which the then-same-module-only
-# hash could not see, so the rotation never re-checked them. The hash now
-# follows pubsub2bq_spark.functions.* imports (evidence.closure_source),
-# which already marks all 13 stale — this set is the belt-and-suspenders
-# guarantee the verdict asked for, and it stays correct even if the
-# regenerated IMPL_EVIDENCE.json were refreshed mid-round. (The seven
-# r5-era stale rows forced in r14 all landed fresh green rows — drained.)
-_FORCE_RECHECK: frozenset[str] = frozenset({
-    "jpeg_decode", "jpeg_subsampled", "jpeg_progressive",
-    "jpeg_progressive_color", "jpeg_lossless", "jpeg_hier", "jpeg_arith",
-    "video_frames_mjpeg", "video_frames_rle", "tiff_decode", "gif_frames",
-    "audio_adpcm", "qoi_decode",
-})
-
-# Keys ADDED in the current round but deliberately scheduled BEHIND the
-# stale re-checks (used in r5 to keep the capped driver budget on the
-# evidence-debt drain). Empty since round 6: the four r5 additions are
-# never-driver-checked, so they take the FRONT of the rotation by the
-# normal tiers. Re-populate when a round both adds keys and carries debt.
-_DEFER_NEW: frozenset[str] = frozenset()
-
-
-def _green_and_stale_keys() -> tuple[set[str], set[str], set[str]]:
-    """Split keys into (fresh-green, strong-stale, weak-stale).
-
-    Fresh-green = IMPL_EVIDENCE.json records terminal driver evidence (a
-    hash-matched row, or — for keys that STILL have no oracle — a
-    rows-only run) whose recorded closure hash (operator + referenced
-    same-module helpers/constants) equals the live one.  Strong-stale =
-    the operator's OWN source changed since its green row (or rows-only
-    evidence for a key that since gained an oracle, or a _FORCE_RECHECK
-    override).  Weak-stale = only referenced helpers/constants changed.
-    Keys in no set have never been driver-checked.
-
-    Falls back to the pre-r5 any-historical-green scan when
-    IMPL_EVIDENCE.json is absent (fresh clone without the artifact)."""
-    from pubsub2bq_spark.evidence import fresh_green_keys, load_evidence
-
-    reg = all_queries()
-    root = os.path.dirname(os.path.abspath(__file__))
-    if load_evidence(root):
-        fresh, strong, weak = fresh_green_keys(reg, root)
-        forced = _FORCE_RECHECK & (fresh | weak)
-        return fresh - forced, strong | forced, weak - forced
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for key, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                green.add(key)
-            elif (
-                row.get("err") == "no_oracle"
-                and key in reg
-                and reg[key].oracle is None
-            ):
-                green.add(key)
-    return green, set(), set()
-
-
-# Graded-first-class LLM-pipeline key prefixes (VERDICT r3 next-steps #1:
-# the ANN + dedup + training-prep families are judged components — they
-# get the capped correctness budget before misc leftovers).
-_LLM_PREFIXES = (
-    "ann_", "minhash", "simhash", "dedup_", "embedding_", "rag_",
-    "doc_chunk", "feature_hash", "negative_sample", "sequence_pack",
-    "dataset_mixture", "corpus_shuffle", "mixture_temperature",
-    "shard_manifest", "dup_passage", "incremental_dedup",
-    "canonical_dedup", "edit_distance", "edit_verified", "ngram_jaccard",
-)
-
-
-def _priority_order(keys: list[str]) -> list[str]:
-    """Order keys so the driver's capped correctness run spends its budget
-    where evidence is missing: (0) SURVEY §2 keys with no driver-green row
-    yet, (1) the un-evidenced TPC-H suite (the composed-workload backbone
-    — many operators compose per query, so each row evidences the most),
-    (2) un-evidenced LLM-pipeline keys (ANN/dedup/training-prep — the
-    graded first-class families), (3) other un-evidenced keys with an
-    oracle, (4) un-evidenced rows-only keys, (5) strong-stale keys — the
-    operator itself was rewritten since its green row (never-checked
-    keys outrank them: no evidence beats outdated evidence), (6)
-    weak-stale keys — only referenced same-module helpers/constants
-    changed, (7) this round's _DEFER_NEW additions (locally verified,
-    deliberately behind the evidence-debt drain), (8) fresh-green keys
-    (rotate to the back — their evidence stands against the current
-    closure hash), ordered OLDEST green round first so any driver budget
-    left after the debt tiers re-evidences the most time-worn rows
-    (VERDICT r5 #3: r1/r2 rows predate the closure-hash machinery).
-    Stable within tiers otherwise."""
-    from pubsub2bq_spark.evidence import load_evidence
-
-    green, strong, weak = _green_and_stale_keys()
-    reg = all_queries()
-    root = os.path.dirname(os.path.abspath(__file__))
-    ev_round = {
-        k: v.get("round", 0) for k, v in load_evidence(root).items()
-    }
-
-    def tier(key: str) -> int:
-        if key in green:
-            return 8
-        if key in _DEFER_NEW:
-            return 7
-        if key in weak:
-            return 6
-        if key in strong:
-            return 5
-        if key in SURVEY2_KEYS:
-            return 0
-        if key.startswith("tpch_"):
-            return 1
-        if key.startswith(_LLM_PREFIXES):
-            return 2
-        return 3 if reg[key].oracle is not None else 4
-
-    def sort_key(key: str) -> tuple[int, int]:
-        t = tier(key)
-        return (t, ev_round.get(key, 0) if t == 8 else 0)
-
-    return sorted(keys, key=sort_key)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -222,11 +48,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so a
-    capped driver run checks never-evidenced keys before re-checking keys
-    already driver-green in a prior round."""
-    reg = all_queries()
-    return {key: reg[key].spark for key in _priority_order(list(reg))}
+    """One entry per implemented operator from SURVEY.md §2, in registry
+    order."""
+    return {key: q.spark for key, q in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -16,10 +16,12 @@ Regression report: each timed run executes in its own Spark job group,
 so the status tracker gives the exact number of jobs and stages it ran.
 A key is stable when its two timed runs agree; a stable key whose
 counts differ from the newest recorded run at the same sf and core
-count is named on stderr and counted in ``counters_changed``. Wall
-times are published, not gated: perfbench/ runs parent and change in
-pairs. Streaming micro-batch jobs run under the stream's own group and
-are not counted; perfbench's cdc_feed workload measures that layer.
+count is named on stderr and counted in ``counters_changed``. Each
+artifact build leg is counted the same way, as key ``build_<name>``
+over its last two cold builds. Wall times are published, not gated:
+perfbench/ runs parent and change in pairs. Streaming micro-batch jobs
+run under the stream's own group and are not counted; perfbench's
+cdc_feed workload measures that layer.
 """
 
 from __future__ import annotations
@@ -357,21 +359,18 @@ def _load_full_run(run_id: str) -> dict | None:
 # ---------------------------------------------------------------------------
 
 
-def run_counted(spark, registry: dict, key: str, sf_dir: str) -> tuple[float, list[int]]:
-    """Run one key to completion; return (wall seconds, [jobs, stages]).
+def _counted(spark, label: str, fn) -> tuple[float, list[int]]:
+    """Call fn(); return (wall seconds, [jobs, stages]).
 
-    The run gets a job group of its own, so the status tracker's job ids
-    for that group are exactly this run's jobs (stage ids are the union
-    over those jobs, skipped stages included). Construction is timed
-    too: operators that do eager work while building (bucketed table
-    writes, iterative fixpoints) must not get it excluded."""
+    The call gets a job group of its own, so the status tracker's job
+    ids for that group are exactly this call's jobs (stage ids are the
+    union over those jobs, skipped stages included)."""
     sc = spark.sparkContext
-    group = f"bench:{key}:{uuid.uuid4().hex}"
-    sc.setJobGroup(group, key)
+    group = f"bench:{label}:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
     try:
         t0 = time.perf_counter()
-        df = registry[key].spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
+        fn()
         seconds = time.perf_counter() - t0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -384,6 +383,19 @@ def run_counted(spark, registry: dict, key: str, sf_dir: str) -> tuple[float, li
         if info is not None:
             stages.update(info.stageIds)
     return seconds, [len(jobs), len(stages)]
+
+
+def run_counted(spark, registry: dict, key: str, sf_dir: str) -> tuple[float, list[int]]:
+    """Run one key to completion; return (wall seconds, [jobs, stages]).
+    Construction is timed and counted too: operators that do eager work
+    while building (bucketed table writes, iterative fixpoints) must not
+    get it excluded."""
+
+    def run() -> None:
+        df = registry[key].spark(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+
+    return _counted(spark, key, run)
 
 
 def stable_counters(
@@ -464,7 +476,7 @@ def _stream_throughput_legs(spark, sf_dir: str) -> dict:
 # a second decode pass) and times the cold rebuild, min-of-3
 # evict-then-build. The builders are eager (materialize() inside
 # session_artifact's build lambda), so the call duration IS the build
-# cost.
+# cost, and its job group holds exactly the build's jobs.
 ARTIFACT_BUILD_LEGS = (
     # (artifact cache key, module, build-trigger attribute)
     ("minhash_lsh_pairs", "pubsub2bq_spark.operators.llm_dedup", "minhash_lsh"),
@@ -491,33 +503,37 @@ ARTIFACT_BUILD_LEGS = (
 )
 
 
-def _artifact_build_legs(spark, sf_dir: str) -> dict[str, float]:
+def _artifact_build_legs(
+    spark, sf_dir: str
+) -> tuple[dict[str, float], list[dict[str, list[int]]]]:
     """Cold build cost per shared session artifact, min-of-3 (each
     measurement evicts the artifact first), published as
-    ``build_<name>_sec`` fields. A failing leg never sinks the bench run
-    but is named on stderr."""
+    ``build_<name>_sec`` fields, plus the [jobs, stages] of the last two
+    builds as two ``{"build_<name>": counts}`` maps for stable_counters.
+    A failing leg never sinks the bench run but is named on stderr."""
     import importlib
 
     from pubsub2bq_spark.tables import drop_session_artifact
 
     out: dict[str, float] = {}
+    last_two: list[dict[str, list[int]]] = [{}, {}]
     for name, module, attr in ARTIFACT_BUILD_LEGS:
         try:
             fn = getattr(importlib.import_module(module), attr)
-            times = []
+            runs = []
             for _ in range(3):
                 drop_session_artifact(spark, name, sf_dir)
-                t0 = time.perf_counter()
-                fn(spark, sf_dir)
-                times.append(time.perf_counter() - t0)
-            out[f"build_{name}_sec"] = round(min(times), 3)
+                runs.append(_counted(spark, f"build_{name}", lambda: fn(spark, sf_dir)))
+            out[f"build_{name}_sec"] = round(min(t for t, _ in runs), 3)
+            for counts, (_, c) in zip(last_two, runs[1:]):
+                counts[f"build_{name}"] = c
         except Exception as ex:
             print(
                 f"bench: build leg {name} FAILED ({ex!r}) — "
                 "absent from this capture",
                 file=sys.stderr,
             )
-    return out
+    return out, last_two
 
 
 def main() -> None:
@@ -552,8 +568,18 @@ def main() -> None:
     timings = {
         key: round(min(r[key][0] for r in rounds), 3) for key in HEADLINE
     }
+
+    stream_metrics = _stream_throughput_legs(spark, sf_dir)
+    # Artifact build-cost legs run LAST: every headline query must see
+    # the warm artifacts (the registered keys' steady-state), and the
+    # evict-rebuild cycles must not perturb the timed rounds.
+    build_metrics, build_counts = _artifact_build_legs(spark, sf_dir)
+
     counters, unstable = stable_counters(
-        *({key: r[key][1] for key in HEADLINE} for r in rounds)
+        *(
+            {**{key: r[key][1] for key in HEADLINE}, **b}
+            for r, b in zip(rounds, build_counts)
+        )
     )
     if unstable:
         print(
@@ -564,12 +590,6 @@ def main() -> None:
     changed = counter_changes(counters, _full_runs(), sf, cpus)
     for line in changed:
         print(f"bench: counters changed {line}", file=sys.stderr)
-
-    stream_metrics = _stream_throughput_legs(spark, sf_dir)
-    # Artifact build-cost legs run LAST: every headline query must see
-    # the warm artifacts (the registered keys' steady-state), and the
-    # evict-rebuild cycles must not perturb the timed rounds.
-    build_metrics = _artifact_build_legs(spark, sf_dir)
 
     result = {
         "metric": "headline_queries_total_wall",

@@ -588,7 +588,7 @@ def read_events_sink(p: CdcPipeline) -> DataFrame:
                 "map-side; busy-time rows/sec scales linearly with "
                 "executors (no shuffle between source and sink). "
                 "Measured r10 at sf0.1 (100k events, local[32]): see "
-                "stream_throughput_* fields in BENCH_r10.json.",
+                "the CDC streaming throughput section of docs/SCALING.md.",
 )
 def stream_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pubsub2bq_spark.streaming.throughput import measure_stream_throughput

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pubsub2bq_spark.registry import register
-from pubsub2bq_spark.tables import fan_out, load, materialize
+from pubsub2bq_spark.tables import _empty_frame, fan_out, load, materialize
 
 N_MINHASH = 8          # minhash signature length
 LSH_BANDS = 4          # bands of 2 rows each
@@ -67,25 +67,6 @@ _JAC_TAU = 0.6
 # bounded but X itself was not). 64 MB keeps the worker's peak at
 # slab + accumulated lower-triangle Gram (≤ m²/2 · 4 B = 32 MB at cap).
 _JAC_DENSE_BUDGET = 64 << 20
-
-# Per-schema memo for the kernels' empty result frames (r15): building
-# `pd.DataFrame({...}).astype({...})` costs ~1 ms and every applyInPandas
-# group call paid it eagerly — with hundreds of small groups per key the
-# empties dominated the kernel profile. The returned frame is shared and
-# read-only by convention (the Arrow serializer only reads it).
-_EMPTY_FRAMES: dict = {}
-
-
-def _empty_frame(schema):
-    """Cached empty DataFrame for a (("col", "dtype"), ...) schema."""
-    df = _EMPTY_FRAMES.get(schema)
-    if df is None:
-        import pandas as pd
-
-        df = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in schema})
-        _EMPTY_FRAMES[schema] = df
-    return df
-
 
 
 def _jaccard_block_kernel(pdf):
@@ -989,7 +970,7 @@ def adaptive_components(
     r10 #6): min-label propagation is cheapest on the shallow graphs
     text near-dup candidates form (converges in ~2 rounds), but needs
     one round per two hops of component diameter — the replicated image
-    graph DNF'd it at 4× (docs/ROUND10_NOTES.md) while star contraction
+    graph DNF'd it at 4× (docs/SCALING.md) while star contraction
     finished in O(log d) rounds. Instead of hard-coding the choice per
     caller, probe with min-label and watch the observed changed-row
     counts: a frontier still above _ADAPTIVE_MIN_FRONTIER that shrank

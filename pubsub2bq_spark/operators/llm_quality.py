@@ -38,25 +38,7 @@ from pubsub2bq_spark.operators._compression_golden import (
 )
 from pubsub2bq_spark.operators.llm_similarity import _cosine, _dvec
 from pubsub2bq_spark.registry import register
-from pubsub2bq_spark.tables import fan_out, load, materialize
-
-# Per-schema memo for the kernels' empty result frames (r15): building
-# `pd.DataFrame({...}).astype({...})` costs ~1 ms and every applyInPandas
-# group call paid it eagerly — with hundreds of small groups per key the
-# empties dominated the kernel profile. The returned frame is shared and
-# read-only by convention (the Arrow serializer only reads it).
-_EMPTY_FRAMES: dict = {}
-
-
-def _empty_frame(schema):
-    """Cached empty DataFrame for a (("col", "dtype"), ...) schema."""
-    df = _EMPTY_FRAMES.get(schema)
-    if df is None:
-        import pandas as pd
-
-        df = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in schema})
-        _EMPTY_FRAMES[schema] = df
-    return df
+from pubsub2bq_spark.tables import _empty_frame, agg_first, fan_out, load, materialize
 
 
 PPL_Z = 1.0          # flag docs with NLL z-score above this
@@ -1408,9 +1390,6 @@ def _logreg_sigmoid(w: list[float]):
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-from pubsub2bq_spark.tables import agg_first as _agg_first  # noqa: E402
-
-
 def _logreg_train(feat: DataFrame, n: int, steps: int = LOGREG_STEPS) -> list[float]:
     """Full-batch GD from w=0. One aggregate job per step; the only
     driver traffic is the 3-number gradient row (the scalar-probe
@@ -1429,7 +1408,7 @@ def _logreg_train(feat: DataFrame, n: int, steps: int = LOGREG_STEPS) -> list[fl
                 F.round(e * F.lit(float(LOGREG_SCALE)), 0).cast("bigint")
             )
 
-        row = _agg_first(
+        row = agg_first(
             feat,
             gi(r).alias("s0"),
             gi(r * F.col("x1")).alias("s1"),
@@ -1483,7 +1462,7 @@ def quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def mi(e):
         return F.sum(F.round(e * F.lit(float(LOGREG_SCALE)), 0).cast("bigint"))
 
-    mrow = _agg_first(
+    mrow = agg_first(
         feat0,
         F.count(F.lit(1)).alias("n"),
         mi(F.col("x1")).alias("s1"),

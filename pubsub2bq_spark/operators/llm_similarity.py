@@ -18,25 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pubsub2bq_spark.registry import register
-from pubsub2bq_spark.tables import fan_out, load, materialize
-
-# Per-schema memo for the kernels' empty result frames (r15): building
-# `pd.DataFrame({...}).astype({...})` costs ~1 ms and every applyInPandas
-# group call paid it eagerly — with hundreds of small groups per key the
-# empties dominated the kernel profile. The returned frame is shared and
-# read-only by convention (the Arrow serializer only reads it).
-_EMPTY_FRAMES: dict = {}
-
-
-def _empty_frame(schema):
-    """Cached empty DataFrame for a (("col", "dtype"), ...) schema."""
-    df = _EMPTY_FRAMES.get(schema)
-    if df is None:
-        import pandas as pd
-
-        df = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in schema})
-        _EMPTY_FRAMES[schema] = df
-    return df
+from pubsub2bq_spark.tables import _empty_frame, fan_out, load, materialize
 
 
 DIM = 64

@@ -22,25 +22,7 @@ from pyspark.sql import functions as F
 
 from pubsub2bq_spark.operators.llm_similarity import DIM, _dot, _dvec
 from pubsub2bq_spark.registry import register
-from pubsub2bq_spark.tables import agg_first, fan_out, load, materialize
-
-# Per-schema memo for the kernels' empty result frames (r15): building
-# `pd.DataFrame({...}).astype({...})` costs ~1 ms and every applyInPandas
-# group call paid it eagerly — with hundreds of small groups per key the
-# empties dominated the kernel profile. The returned frame is shared and
-# read-only by convention (the Arrow serializer only reads it).
-_EMPTY_FRAMES: dict = {}
-
-
-def _empty_frame(schema):
-    """Cached empty DataFrame for a (("col", "dtype"), ...) schema."""
-    df = _EMPTY_FRAMES.get(schema)
-    if df is None:
-        import pandas as pd
-
-        df = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in schema})
-        _EMPTY_FRAMES[schema] = df
-    return df
+from pubsub2bq_spark.tables import _empty_frame, agg_first, fan_out, load, materialize
 
 
 K_CLUSTERS = 8
@@ -2066,7 +2048,7 @@ def _pca_component(spark: SparkSession, sf_dir: str):
     # centroids), constant in corpus size. The power iteration then
     # runs in exact Python integer arithmetic, mirroring the oracle's
     # unrolled CTEs operand-for-operand — no per-step cluster jobs.
-    cells = _pca_agg_first(
+    cells = agg_first(
         cov, F.collect_list(F.struct("i", "j", "c")).alias("cells")
     )["cells"]
     if not cells:
@@ -2091,9 +2073,6 @@ def _pca_component(spark: SparkSession, sf_dir: str):
     eigval = float(w_f[k_star]) / (float(PCA_QC) * float(v_q[k_star]))
     sgn = -1.0 if v_q[k_star] < 0 else 1.0
     return v_q, sgn, eigval
-
-
-from pubsub2bq_spark.tables import agg_first as _pca_agg_first  # noqa: E402
 
 
 @register(

@@ -95,7 +95,7 @@ def orc_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read_blob() hashes the SAME files the Spark binaryFile scan
     # reads. The oracle string is static, so it pins the DRIVER's
     # correctness scale (sf0.01) — the one place the oracle runs; the
-    # repo's own harnesses (strict_parity, driver_twin) default to the
+    # repo's own harness (scripts/strict_parity.py) defaults to the
     # same dir. The fingerprint is md5 over the UPPERCASE HEX encoding
     # of the bytes (not the raw bytes) because DuckDB's md5() only
     # accepts VARCHAR — an equally collision-resistant content check

@@ -240,6 +240,25 @@ def drop_session_artifact(spark: SparkSession, name: str, sf_dir: str) -> bool:
     return cache.pop((name, sf_dir), None) is not None
 
 
+# Per-schema memo for the kernels' empty result frames (r15): building
+# `pd.DataFrame({...}).astype({...})` costs ~1 ms and every applyInPandas
+# group call paid it eagerly — with hundreds of small groups per key the
+# empties dominated the kernel profile. The returned frame is shared and
+# read-only by convention (the Arrow serializer only reads it).
+_EMPTY_FRAMES: dict = {}
+
+
+def _empty_frame(schema):
+    """Cached empty DataFrame for a (("col", "dtype"), ...) schema."""
+    df = _EMPTY_FRAMES.get(schema)
+    if df is None:
+        import pandas as pd
+
+        df = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in schema})
+        _EMPTY_FRAMES[schema] = df
+    return df
+
+
 def agg_first(df: DataFrame, *exprs):
     """Scalar probe: a full map-side-combined aggregate whose only
     driver traffic is the single result row (constant bytes regardless

@@ -148,3 +148,23 @@ def test_ivf_kmeans_cold_build_job_count(spark):
         spark, all_queries(), "ann_ivf_kmeans", SF_SMOKE
     )
     assert 1 <= jobs <= 24, (jobs, stages)
+
+
+def test_artifact_build_counts_reach_counters(spark, monkeypatch):
+    """Each artifact build leg is counted under a job group of its own,
+    so a cold minhash_lsh_pairs build at sf0.001 reads the same nonzero
+    [jobs, stages] on its last two builds and lands in the record's
+    counters as ``build_minhash_lsh_pairs``."""
+    monkeypatch.setattr(
+        bench,
+        "ARTIFACT_BUILD_LEGS",
+        [leg for leg in bench.ARTIFACT_BUILD_LEGS if leg[0] == "minhash_lsh_pairs"],
+    )
+    times, (second, third) = bench._artifact_build_legs(spark, SF_SMOKE)
+    assert times["build_minhash_lsh_pairs_sec"] > 0
+    jobs, stages = second["build_minhash_lsh_pairs"]
+    assert 1 <= jobs <= stages, (jobs, stages)
+    stable, unstable = bench.stable_counters(second, third)
+    assert stable == {"build_minhash_lsh_pairs": [jobs, stages]}
+    assert unstable == []
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

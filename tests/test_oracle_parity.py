@@ -71,3 +71,7 @@ def test_oracle_keys_subset_of_queries():
     o = e.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 40  # coverage floor; grows with SURVEY §2
+    # the contract hands back the registry itself, in registry order
+    reg = all_queries()
+    assert list(q) == list(reg)
+    assert o == {k: v.oracle for k, v in reg.items() if v.oracle is not None}

@@ -1,11 +1,11 @@
 """Focused tests for the r14 optimization-round internals.
 
 Each optimization that changed an operator's internals gets a pinned
-equivalence or regression test here (OPTIMIZATION_r14.md): the LUT
-Huffman reader, the shared lossless reconstruction, the QM trailing-FF
-flush stuffing, the clipped-add parallel scan, the TIFF LZW vectorized
-parse, the LZW int-key encoders, the QOI run-leader encoder, and the
-MP2 table CRC + vectorized sample gather.
+equivalence or regression test here: the LUT Huffman reader, the shared
+lossless reconstruction, the QM trailing-FF flush stuffing, the
+clipped-add parallel scan, the TIFF LZW vectorized parse, the LZW
+int-key encoders, the QOI run-leader encoder, and the MP2 table CRC +
+vectorized sample gather.
 """
 
 from __future__ import annotations
