@@ -24,7 +24,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pubsub2bq_spark.registry import register
-from pubsub2bq_spark.tables import _empty_frame, fan_out, load, materialize
+from pubsub2bq_spark.tables import (
+    _empty_frame,
+    _size_bytes,
+    fan_out,
+    fetch_rows,
+    load,
+    materialize,
+    rows_frame,
+)
 
 N_MINHASH = 8          # minhash signature length
 LSH_BANDS = 4          # bands of 2 rows each
@@ -62,7 +70,7 @@ def text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JAC_KERNEL_CAP = 4096  # block members before the salted-join fallback
 _JAC_TAU = 0.6
 # Byte cap for any single dense doc×vocab-chunk slab inside the kernel
-# (ADVICE r11: a full m×V matrix is O(m·V) — 4096 vocabulary-diverse
+# (a full m×V matrix is O(m·V) — 4096 vocabulary-diverse
 # docs × ~1M distinct tokens would be tens of GB; the Gram blocks were
 # bounded but X itself was not). 64 MB keeps the worker's peak at
 # slab + accumulated lower-triangle Gram (≤ m²/2 · 4 B = 32 MB at cap).
@@ -159,7 +167,7 @@ def _jaccard_block_kernel(pdf):
             # x*1e6's float error crosses a .5 boundary, which needs a
             # denominator with a factor 2^7/5^7 (> any block size here);
             # accepted divergence, and the driver's exact hash would
-            # surface it (ADVICE r11). Same convention in llm_quality /
+            # surface it. Same convention in llm_quality /
             # llm_similarity kernels and gen_compression_golden.
             "jaccard": np.floor(j * 1e6 + 0.5) / 1e6,
         }
@@ -257,7 +265,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "double"
     )
     union = F.size(F.array_distinct(F.concat(F.col("tok_a"), F.col("tok_b"))))
-    # nullif guard (ADVICE r4): two letter-free docs in one block give
+    # nullif guard: two letter-free docs in one block give
     # 0/0 — Spark yields NULL (pair dropped) but DuckDB IEEE float ops
     # can yield NaN/inf; nullif on BOTH sides pins the semantics.
     jac = inter / F.nullif(union.cast("double"), F.lit(0.0))
@@ -338,7 +346,7 @@ def _minhash_sig_sql() -> str:
     """
 
 
-# Hot-bucket salting for the band self-joins (VERDICT r4 #5): a bucket
+# Hot-bucket salting for the band self-joins: a bucket
 # with B members emits B^2 pairs through ONE reducer when the shuffle key
 # is the band value alone — a degenerate block (thousands of identical
 # docs) serializes the whole operator. Buckets above _HOT_BUCKET_T split
@@ -645,9 +653,10 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "hot bands (e.g. all-zero fingerprints from tiny docs) "
                 f"over {_HOT_BUCKET_T} members are fragment-replicate "
                 "salted (_salted_self_join). The distance check is "
-                "two xor+popcounts — whole-stage codegen, no UDF. This "
-                "is the clustering VERDICT r3 asked for: re-grouping on "
-                "band masks instead of equal 16-bit fingerprints.",
+                "two xor+popcounts — whole-stage codegen, no UDF. "
+                "Candidates group on 8-bit band values (pigeonhole-"
+                "complete at the radius), not on equal 16-bit "
+                "fingerprints.",
 )
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = _sh_bits(spark, sf_dir)
@@ -697,99 +706,12 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLUSTER_MAX_ITERS = 30
-
-
-def min_label_components(pairs: DataFrame, op_name: str = "dedup_clusters") -> DataFrame:
-    """Connected components by iterative min-label propagation over an
-    undirected candidate-pair graph. ``pairs``: (src, dst) with one row
-    per edge direction-agnostic; returns (doc_id, cluster_id). Shared by
-    the text (minhash) and image (phash) dedup-cluster keys."""
-    labels, _ = _min_label_run(pairs, stall=None)
-    if labels is None:
-        raise RuntimeError(
-            f"{op_name} did not converge in {_CLUSTER_MAX_ITERS} iterations"
-        )
-    return labels
-
-
-def _min_label_run(
-    pairs: DataFrame, stall
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """Min-label propagation core. ``stall(history)`` — called after
-    each non-converged round with the changed-row counts so far — may
-    return True to abandon the run (the adaptive selector's switch
-    signal). Returns ``(final, partial)``: on convergence ``final`` is
-    the (doc_id, cluster_id) frame and ``partial`` is None; on stall or
-    round-cap ``final`` is None and ``partial`` is the latest
-    (doc_id, label) frame — already materialized, labels partially
-    converged — so the caller can contract the graph through it instead
-    of discarding the rounds already paid (VERDICT r11 #1)."""
-    edges = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(materialize)
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .transform(materialize)
-    )
-    def propagate(lbl: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-        neighbor_min = (
-            edges.join(lbl, edges.src == lbl.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        return lbl.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            *carry,
-            F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
-        )
-
-    from pyspark.sql import Observation
-
-    history: list[int] = []
-    for _ in range(_CLUSTER_MAX_ITERS):
-        # Two propagation hops per materialization: near-dup components
-        # are shallow, and the eager per-round action dominates the cost
-        # — doubling the hop count halves the rounds without changing
-        # the fixpoint. Convergence rides the SAME action (VERDICT r9
-        # #3): the round's pre-hop label is carried alongside, and an
-        # observe() metric counts rows whose label changed — the
-        # localCheckpoint job fires the CollectMetrics node, so each
-        # round is exactly ONE job, with no separate convergence agg.
-        # Counting changed rows (not sum(label), ADVICE r9) also can't
-        # overflow int64 at production doc_id ranges.
-        stepped = propagate(
-            propagate(
-                labels.withColumn("label0", F.col("label")), carry=("label0",)
-            ),
-            carry=("label0",),
-        )
-        obs = Observation()
-        observed = stepped.observe(
-            obs,
-            F.count(F.when(F.col("label") != F.col("label0"), True)).alias(
-                "changed"
-            ),
-        ).drop("label0")
-        labels = materialize(observed)
-        changed = obs.get["changed"]
-        if changed == 0:
-            return (
-                labels.select("doc_id", F.col("label").alias("cluster_id")),
-                None,
-            )
-        history.append(changed)
-        if stall is not None and stall(history):
-            return None, labels
-    return None, labels
-
-
 # Star rounds run in bursts of _STAR_ROUNDS_PER_TRY, each burst followed
-# by an exact-finish attempt; _STAR_MAX_ROUNDS_TOTAL bounds the whole
-# contraction (heights halve per round, so 32 rounds covers diameters
-# past 2^32 — unreachable at any physical corpus size).
+# by an exact-finish attempt of at most _CLUSTER_MAX_ITERS two-hop
+# rounds; _STAR_MAX_ROUNDS_TOTAL bounds the whole contraction (heights
+# halve per round, so 32 rounds covers diameters past 2^32 —
+# unreachable at any physical corpus size).
+_CLUSTER_MAX_ITERS = 30
 _STAR_ROUNDS_PER_TRY = 8
 _STAR_MAX_ROUNDS_TOTAL = 32
 
@@ -799,10 +721,10 @@ def star_contraction_components(
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star edge
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — the public algorithm min_label_components'
-    scale_notes promise as the 100 TB path), finished by the exact
-    min-label loop. Same signature and fixpoint as
-    :func:`min_label_components` (asserted in tests/test_units.py).
+    Beyond", SoCC'14), finished by an exact min-label loop: the path
+    connected_components takes for graphs above its driver bound. Same
+    output as the driver-side union-find (asserted in
+    tests/test_units.py).
 
     Why it wins at scale: plain min-label propagation needs one round
     per two hops of component DIAMETER (the image phash graph measured
@@ -909,7 +831,7 @@ def star_contraction_components(
     # Original vertex set, BEFORE the self-loop filter AND before
     # contraction rewires edges: a doc whose only pair is (x, x) must
     # still come out as its own singleton cluster — the same output
-    # min_label_components gives it — and the final labels must cover
+    # the driver-side union-find gives it — and the final labels must cover
     # every input vertex even as star rounds move it to the dst-only
     # side of the forest. Derived from the one materialized raw frame
     # and consumed once per finish seed — no eager action of its own.
@@ -950,90 +872,49 @@ def star_contraction_components(
     )
 
 
-# Adaptive selector tuning (VERDICT r10 #6). The probe gives min-label
-# _ADAPTIVE_PROBE_ROUNDS double-hop rounds for free; from then on a
-# round whose changed count fails to shrink below _ADAPTIVE_SHRINK of
-# the previous round's is the deep-component signature (shallow near-dup
-# graphs collapse the frontier geometrically and converge in ~2 rounds;
-# a path/replicated graph sheds a near-constant number per round). Tails
-# under _ADAPTIVE_MIN_FRONTIER rows finish cheaper in min-label than a
-# star restart regardless of ratio.
-_ADAPTIVE_PROBE_ROUNDS = 2
-_ADAPTIVE_SHRINK = 0.5
-_ADAPTIVE_MIN_FRONTIER = 64
+def connected_components(pairs: DataFrame, op_name: str) -> DataFrame:
+    """Connected components of the undirected (src, dst) pair graph:
+    (doc_id, cluster_id) for every endpoint, labeled with its
+    component's minimum doc_id; a vertex whose only pair is (x, x) is
+    its own singleton. Shared by dedup_clusters and image_dedup_clusters.
 
+    A graph of at most autoBroadcastJoinThreshold // 16 edges (two
+    bigint endpoints per edge: 655,360 at the 10 MB default; a threshold
+    <= 0 turns this path off) is fetched in one bounded job and solved
+    on the driver by union-find whose roots are component minimums:
+    near-dup graphs are that small, and every round of a distributed
+    algorithm is a scheduler round trip (crossover measurements in
+    docs/SCALING.md). A larger graph goes to star contraction."""
+    import pandas as pd
 
-def adaptive_components(
-    pairs: DataFrame, op_name: str = "dedup_clusters"
-) -> DataFrame:
-    """Connected components with MEASURED algorithm selection (VERDICT
-    r10 #6): min-label propagation is cheapest on the shallow graphs
-    text near-dup candidates form (converges in ~2 rounds), but needs
-    one round per two hops of component diameter — the replicated image
-    graph DNF'd it at 4× (docs/SCALING.md) while star contraction
-    finished in O(log d) rounds. Instead of hard-coding the choice per
-    caller, probe with min-label and watch the observed changed-row
-    counts: a frontier still above _ADAPTIVE_MIN_FRONTIER that shrank
-    less than _ADAPTIVE_SHRINK× in the last round (checked once the
-    _ADAPTIVE_PROBE_ROUNDS warm-up has run) is the deep-graph signature
-    — abandon and run star contraction on the original pairs. A cap hit
-    without the signature ALSO falls back to star, so no graph shape can
-    DNF. Both algorithms share one fixpoint (tests/test_units.py), so
-    the selection is output-invisible; the probe costs at most the
-    bounded min-label rounds already paid.
+    spark = pairs.sparkSession
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    bound = _size_bytes(threshold) // 16
+    edges = fetch_rows(pairs.select("src", "dst"), bound) if bound > 0 else None
+    if edges is None:
+        return star_contraction_components(pairs, op_name)
 
-    Why not select on a precomputed graph statistic: diameter IS the
-    deciding property and estimating it costs the same propagation
-    rounds the probe already runs — the probe is the measurement.
+    parent: dict = {}
 
-    The probe PAYS FOR ITSELF on a switch (VERDICT r11 #1): instead of
-    restarting star contraction from the raw pairs, the probe's
-    partially-converged labels contract the graph first — every edge
-    (u, v) becomes (label(u), label(v)), so the vertices the probe
-    already merged collapse to one before star's first window pass.
-    Labels are doc_ids from the same component (min-label invariant)
-    and the component minimum always labels itself, so the contracted
-    component's minimum vertex IS the original component's minimum
-    doc_id — star's answer on the contracted graph, mapped back through
-    the label relation, is exactly the shared fixpoint (asserted in
-    tests/test_units.py::test_adaptive_switch_seeds_star_from_probe)."""
+    def find(v):
+        root = v
+        while parent[root] != root:
+            root = parent[root]
+        while parent[v] != root:  # path compression
+            parent[v], v = root, parent[v]
+        return root
 
-    def stall(history: list[int]) -> bool:
-        return (
-            len(history) >= _ADAPTIVE_PROBE_ROUNDS
-            and history[-1] > _ADAPTIVE_MIN_FRONTIER
-            and history[-1] > _ADAPTIVE_SHRINK * history[-2]
-        )
-
-    labels, partial = _min_label_run(pairs, stall=stall)
-    if labels is not None:
-        return labels
-    # partial covers every vertex of pairs (built from the bidirectional
-    # endpoint set), so both inner joins are total. distinct() shrinks
-    # the contracted edge multiset — after 2+ probe rounds most edges
-    # map to a handful of label-vertices — before star's window passes.
-    contracted = (
-        pairs.select("src", "dst")
-        .join(
-            partial.select(
-                F.col("doc_id").alias("src"), F.col("label").alias("_lsrc")
-            ),
-            "src",
-        )
-        .join(
-            partial.select(
-                F.col("doc_id").alias("dst"), F.col("label").alias("_ldst")
-            ),
-            "dst",
-        )
-        .select(F.col("_lsrc").alias("src"), F.col("_ldst").alias("dst"))
-        .distinct()
-    )
-    comp = star_contraction_components(contracted, op_name=op_name)
-    return (
-        partial.join(
-            comp.withColumnRenamed("doc_id", "label"), "label"
-        ).select("doc_id", "cluster_id")
+    for src, dst in edges:
+        parent.setdefault(src, src)
+        parent.setdefault(dst, dst)
+        a, b = find(src), find(dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    key = pairs.schema["src"].dataType.simpleString()
+    return rows_frame(
+        spark,
+        pd.DataFrame({"doc_id": list(parent), "cluster_id": [find(v) for v in parent]}),
+        f"doc_id {key}, cluster_id {key}",
     )
 
 
@@ -1064,29 +945,27 @@ def adaptive_components(
     doc="Connected components over the minhash_lsh candidate graph: every "
         "document in a near-dup component gets the component's minimum "
         "doc_id as cluster_id — the canonical-representative step that "
-        "turns pairwise candidates into dedup groups. Iterative min-label "
-        "propagation; the oracle is a recursive-CTE transitive closure.",
-    scale_notes="Each iteration is one edge⋈label join + min-aggregate — "
-                "all shuffles keyed on doc_id, state is 2 longs per vertex. "
-                "Iterations ≈ graph diameter (near-dup components are "
-                "shallow; single digits in practice — the minhash graph "
-                "converges in 2 two-hop rounds at sf0.1, where min-label "
-                "and star contraction measure equal). localCheckpoint "
-                "truncates lineage so plan size stays O(1) per round; "
-                "convergence rides the propagate job as an observe() "
-                "metric, one action per round. The algorithm is AUTO-"
-                "selected (r11, adaptive_components): the min-label probe "
-                "watches its own changed-row counts and switches to the "
-                "fixpoint-identical star contraction when the frontier "
-                "stops shrinking — so a deep text graph cannot DNF the "
-                "way the 4× image graph did, with zero extra cost on the "
-                "shallow graphs this key actually sees.",
+        "turns pairwise candidates into dedup groups. connected_components: "
+        "union-find on the driver for a bounded edge set, star contraction "
+        "above it; the oracle is a recursive-CTE transitive closure.",
+    scale_notes="The candidate graph is tiny next to the corpus (31 edges "
+                "at sf0.01), so it is fetched in one job capped at "
+                "autoBroadcastJoinThreshold // 16 edges (655,360 at the "
+                "default) and labeled by union-find on the driver; the "
+                "labels return as an Arrow-built frame, no Python worker. "
+                "A cold run is 13 Spark jobs at sf0.001, a warm one 3, "
+                "with no iteration whose count depends on the data. "
+                "Past the bound the same function runs large-star/"
+                "small-star contraction (Kiveris et al. SoCC'14): O(log "
+                "diameter) rounds of two window-min passes keyed on node "
+                "id, edges only shrink, then an exact min-label finish — "
+                "no driver state grows with the graph.",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    return adaptive_components(pairs)
+    return connected_components(pairs, "dedup_clusters")
 
 
 @register(
@@ -1134,7 +1013,7 @@ def minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = toks.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
     b = toks.select(F.col("doc_id").alias("doc_b"), F.col("tok").alias("tok_b"))
     inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b"))).cast("double")
-    # nullif guard (ADVICE r4): pins 0/0 to NULL on both engines.
+    # nullif guard: pins 0/0 to NULL on both engines.
     union = F.nullif(
         F.size(F.array_distinct(F.concat(F.col("tok_a"), F.col("tok_b")))).cast("double"),
         F.lit(0.0),
@@ -1355,7 +1234,7 @@ def _lev_block_kernel(pdf):
     partition of the block's pairs, so each unordered pair is scored
     exactly once). Emits every pair with lev <= LEV_MAX. The scoring
     mode comes from the explicit per-group ``cross`` column (s1 != s2,
-    constant within a group — ADVICE r11: inferring cross from the
+    constant within a group; inferring cross from the
     presence of side==1 rows would silently re-score fragment s1's
     internal pairs as TRIANGULAR when a cross group arrives with its
     side-1 fragment empty, duplicating group (s1,s1)'s output)."""
@@ -1586,8 +1465,8 @@ def _lev_pair_batches(it):
         JOIN heads hb ON hb.doc_id = c.doc_b
         WHERE levenshtein(ha.head, hb.head) <= {LEV_MAX}
     """,
-    doc="The composed sketch→verify near-dup pipeline for EDIT DISTANCE "
-        "(VERDICT r11 #6): MinHash-LSH candidate generation (recall) "
+    doc="The composed sketch→verify near-dup pipeline for EDIT DISTANCE: "
+        "MinHash-LSH candidate generation (recall) "
         "followed by exact bit-parallel Levenshtein verification over "
         f"the first {LEV_PREFIX} chars (precision, threshold {LEV_MAX}) "
         "— the 100 TB headline for character-level dedup. "
@@ -1780,7 +1659,7 @@ def minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(materialize)  # both truth self-join sides, one shingle pass
     sa, sb = shset.alias("a"), shset.alias("b")
     s_inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))).cast("double")
-    # nullif guards here and below (ADVICE r4): 0/0 on letter-free doc
+    # nullif guards here and below: 0/0 on letter-free doc
     # pairs is NULL on Spark but NaN/inf on DuckDB; nullif on both sides
     # pins both engines to NULL → pair excluded.
     s_union = F.nullif(

@@ -205,8 +205,8 @@ def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 // greatest(width, height)) AS INTEGER)  AS out_h
         FROM g GROUP BY doc_id, n_bytes, width, height
     """,
-    doc="Baseline-JPEG decode, REAL end-to-end (VERDICT r11 #7 — the "
-        "JPEG twin of image_resize's PNG path): the kernel synthesizes "
+    doc="Baseline-JPEG decode, REAL end-to-end (the JPEG twin of "
+        "image_resize's PNG path): the kernel synthesizes "
         "a real baseline sequential JPEG per payload (dims from the "
         "shared byte-length rule; pixels CONSTANT per 8×8 block, "
         "v = (11·bx + 7·by) mod 256), genuinely decodes it with the "
@@ -402,8 +402,7 @@ def jpeg_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM m JOIN yg USING (doc_id) JOIN cg USING (doc_id)
     """,
     doc="4:2:0 chroma-subsampled COLOR JPEG decode, REAL end-to-end "
-        "(VERDICT r12 #3 — the layout of most real-world JPEGs, the "
-        "format users hit first behind the former gate): the kernel "
+        "(the layout of most real-world JPEGs): the kernel "
         "synthesizes a real 4:2:0 YCbCr JPEG per payload (Y constant "
         "per 8×8 block, Cb/Cr constant per 16×16 macroblock), then "
         "genuinely decodes it — MCU-interleaved entropy decode with "
@@ -726,7 +725,7 @@ def jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM g GROUP BY doc_id, n_bytes, width, height
     """,
     doc="ARITHMETIC PROGRESSIVE (SOF10) JPEG decode, REAL end-to-end "
-        "(r14, VERDICT r13 #7 — the last cell of the T.81 process "
+        "(the last cell of the T.81 process "
         "matrix, composed from the two existing machinery halves): the "
         "kernel synthesizes a real four-scan SOF10 stream per payload "
         "(DC first at Al=1 -> band AC first -> DC refinement -> AC "
@@ -1263,8 +1262,8 @@ def audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM sc JOIN q ON sc.doc_id = q.doc_id AND sc.f = q.f
         GROUP BY sc.doc_id, sc.n
     """,
-    doc="MPEG-1 Audio Layer II decode, REAL end-to-end (r14 — the first "
-        "PERCEPTUAL audio family member, VERDICT r13 #6a): the kernel "
+    doc="MPEG-1 Audio Layer II decode, REAL end-to-end (the first "
+        "PERCEPTUAL audio family member): the kernel "
         "synthesizes a real mono 48 kHz / 64 kbit/s Layer II stream per "
         "payload (CRC-protected 192-byte frames; two allocated subbands "
         "per frame cycling ungrouped levels 7/15/31/63 AND the grouped "
@@ -1650,28 +1649,31 @@ def audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "genuinely decoded pixels), each image labeled with its "
         "component's minimum doc_id — the canonical-representative step "
         "that turns pairwise image matches into dedup groups, the image "
-        "twin of dedup_clusters. Large-star/small-star contraction "
-        "(star_contraction_components, fixpoint-identical to the "
-        "min-label twin); recursive-CTE closure oracle.",
-    scale_notes="The phash graph is DEEP (chained near-dups: 13 min-label "
-                "rounds at sf0.1), which the adaptive selector "
-                "(adaptive_components, r11) detects from the probe's own "
-                "changed-row counts and switches to large-star/small-star "
-                "contraction (Kiveris et al. SoCC'14): rounds ~ O(log "
-                "diameter), each two window-min passes keyed on node id, "
-                "edges only shrink — star measured 2.9s vs 6.0s isolated "
-                "vs the min-label loop at sf0.1, identical output "
-                "(tests/test_units.py). The edges come from the banded "
-                "Hamming join — pixels decoded once in the hash pass, "
-                "never touched again.",
+        "twin of dedup_clusters, through the same connected_components "
+        "(union-find on the driver for a bounded edge set, star "
+        "contraction above it); recursive-CTE closure oracle.",
+    scale_notes="The phash graph is small and deep (4 edges at sf0.001, "
+                "172 at sf0.01; chained near-dups needed 13 min-label "
+                "rounds at sf0.1). Up to autoBroadcastJoinThreshold // "
+                "16 edges it is fetched in one capped job and labeled by "
+                "union-find on the driver, whose cost is the same at any "
+                "depth: a cold run (phash pass, band join, components) "
+                "is 12 Spark jobs at sf0.001 and a warm one 3. Past the "
+                "bound, large-star/small-star contraction (Kiveris et "
+                "al. SoCC'14) takes O(log diameter) rounds, each two "
+                "window-min passes keyed on node id, with edges only "
+                "shrinking; on a 10k-edge path it took 85–95 s, so a "
+                "deep graph above the bound stays slow (docs/SCALING.md). "
+                "The edges come from the banded Hamming join — pixels "
+                "decoded once in the hash pass, never touched again.",
 )
 def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.operators.llm_dedup import adaptive_components
+    from pubsub2bq_spark.operators.llm_dedup import connected_components
 
     pairs = image_phash_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    return adaptive_components(pairs, op_name="image_dedup_clusters")
+    return connected_components(pairs, "image_dedup_clusters")
 
 
 @register(
@@ -1759,8 +1761,8 @@ def video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * least(8, h - 8 * by)) AS BIGINT) AS px_sum
         FROM g GROUP BY doc_id, f, w, h
     """,
-    doc="Motion-JPEG video frame extraction, REAL end-to-end (VERDICT "
-        "r12 #7 — the first COMPRESSED-video family member): the kernel "
+    doc="Motion-JPEG video frame extraction, REAL end-to-end (the "
+        "first COMPRESSED-video family member): the kernel "
         "synthesizes a real MJPEG-in-AVI stream per payload (fourcc/"
         "biCompression 'MJPG', each frame a self-contained baseline "
         "JPEG in a '00dc' chunk — the standard layout), genuinely "

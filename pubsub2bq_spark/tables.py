@@ -268,6 +268,25 @@ def agg_first(df: DataFrame, *exprs):
     return df.agg(*exprs).first()
 
 
+def fetch_rows(df: DataFrame, max_rows: int):
+    """Every row of ``df`` as a list of Rows, or None when it has more
+    than ``max_rows``. The ``limit`` caps what reaches the driver at
+    ``max_rows + 1`` rows whatever the frame's size."""
+    n, rows = agg_first(
+        df.limit(max_rows + 1),
+        F.count(F.lit(1)),
+        F.collect_list(F.struct(*df.columns)),
+    )
+    return None if n > max_rows else rows
+
+
+def rows_frame(spark: SparkSession, pdf, ddl: str) -> DataFrame:
+    """Driver-held rows (a pandas frame) as a DataFrame of schema ``ddl``.
+    With Arrow enabled (session.py) the rows travel as Arrow batches
+    straight to the JVM, so no Python worker runs."""
+    return spark.createDataFrame(pdf, ddl)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one logical table as a DataFrame."""
     if name not in TABLE_NAMES:

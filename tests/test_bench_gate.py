@@ -150,6 +150,21 @@ def test_ivf_kmeans_cold_build_job_count(spark):
     assert 1 <= jobs <= 24, (jobs, stages)
 
 
+def test_image_dedup_clusters_cold_job_count(spark):
+    """A cold image_dedup_clusters run (phash pass, band join and
+    connected components) stays within 12 Spark jobs: the bounded
+    candidate graph is fetched once and labeled on the driver. The
+    min-label probe with its star fallback took 40-42."""
+    from pubsub2bq_spark.registry import all_queries
+    from pubsub2bq_spark.tables import clear_session_artifacts
+
+    clear_session_artifacts()
+    _seconds, (jobs, stages) = bench.run_counted(
+        spark, all_queries(), "image_dedup_clusters", SF_SMOKE
+    )
+    assert 1 <= jobs <= 12, (jobs, stages)
+
+
 def test_artifact_build_counts_reach_counters(spark, monkeypatch):
     """Each artifact build leg is counted under a job group of its own,
     so a cold minhash_lsh_pairs build at sf0.001 reads the same nonzero

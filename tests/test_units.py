@@ -421,27 +421,29 @@ def test_reliable_tier_caps_plan_string_length(spark, monkeypatch):
 
 
 class TestStarContractionComponents:
-    """star_contraction_components must reach the exact same fixpoint as
-    min_label_components on every graph shape — the star phase is a
-    contraction accelerator (Kiveris et al. SoCC'14), never a semantics
+    """star_contraction_components must give exactly the labels of the
+    driver-side union-find in connected_components on every graph shape
+    — the star phase is a contraction accelerator (Kiveris et al.
+    SoCC'14) for graphs above the driver bound, never a semantics
     change."""
 
-    def _both(self, spark, edge_list):
+    @staticmethod
+    def _labels(df):
+        return {(r.doc_id, r.cluster_id) for r in df.collect()}
+
+    def _both_on(self, pairs):
         from pubsub2bq_spark.operators.llm_dedup import (
-            min_label_components,
+            connected_components,
             star_contraction_components,
         )
 
-        pairs = spark.createDataFrame(edge_list, "src long, dst long")
-        a = {
-            (r.doc_id, r.cluster_id)
-            for r in min_label_components(pairs).collect()
-        }
-        b = {
-            (r.doc_id, r.cluster_id)
-            for r in star_contraction_components(pairs).collect()
-        }
-        return a, b
+        return (
+            self._labels(connected_components(pairs, "dedup_clusters")),
+            self._labels(star_contraction_components(pairs)),
+        )
+
+    def _both(self, spark, edge_list):
+        return self._both_on(spark.createDataFrame(edge_list, "src long, dst long"))
 
     def test_long_path_graph(self, spark):
         # Diameter-40 path: the shape min-label is slowest on (20 two-hop
@@ -477,34 +479,21 @@ class TestStarContractionComponents:
         pairs = minhash_lsh(spark, "/root/testdata/sf0.001").select(
             SF.col("doc_a").alias("src"), SF.col("doc_b").alias("dst")
         )
-        from pubsub2bq_spark.operators.llm_dedup import (
-            min_label_components,
-            star_contraction_components,
-        )
-
-        a = {(r.doc_id, r.cluster_id) for r in min_label_components(pairs).collect()}
-        b = {
-            (r.doc_id, r.cluster_id)
-            for r in star_contraction_components(pairs).collect()
-        }
+        a, b = self._both_on(pairs)
         assert a == b and a
 
     def test_self_loop_only_vertex_kept_as_singleton(self, spark):
         # A doc whose ONLY pair is (x, x) must come out as its own
-        # singleton cluster, exactly as min_label emits it (ADVICE r10:
-        # seeding vertices after the src != dst filter silently dropped
-        # it, breaking the same-fixpoint contract).
+        # singleton cluster, exactly as the union-find labels it (seeding
+        # star's vertices after the src != dst filter once dropped it).
         edges = [(7, 7), (1, 2)]
         a, b = self._both(spark, edges)
         assert a == b
         assert a == {(7, 7), (1, 1), (2, 1)}
 
-    def test_adaptive_switches_to_star_on_deep_graph(self, spark, monkeypatch):
-        # A diameter-300 path sheds a near-constant frontier per
-        # min-label round — the deep-graph signature the probe watches
-        # for. The selector must hand off to star contraction after the
-        # probe rounds (not grind 75 two-hop rounds), and the output
-        # must be the shared fixpoint.
+    def _routed(self, spark, monkeypatch, edge_list, threshold):
+        """(labels, star called?) of connected_components with
+        spark.sql.autoBroadcastJoinThreshold set to ``threshold``."""
         from pubsub2bq_spark.operators import llm_dedup
 
         calls = []
@@ -515,93 +504,66 @@ class TestStarContractionComponents:
             return real(pairs, op_name)
 
         monkeypatch.setattr(llm_dedup, "star_contraction_components", spy)
-        n = 300
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(n)], "src long, dst long"
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        before = spark.conf.get(key)
+        spark.conf.set(key, threshold)
+        try:
+            pairs = spark.createDataFrame(edge_list, "src long, dst long")
+            got = self._labels(llm_dedup.connected_components(pairs, "t"))
+        finally:
+            spark.conf.set(key, before)
+        return got, bool(calls)
+
+    def test_driver_bound_routes_by_edge_count(self, spark, monkeypatch):
+        # A threshold of 48 bytes bounds the driver path at 48 // 16 = 3
+        # edges: exactly 3 stay on the driver, a 4th sends the graph to
+        # star, and -1 (the driver path off) always takes star.
+        three = [(5, 6), (6, 7), (9, 9)]
+        four = three + [(7, 1)]
+        want3 = {(5, 5), (6, 5), (7, 5), (9, 9)}
+        want4 = {(1, 1), (5, 1), (6, 1), (7, 1), (9, 9)}
+        assert self._routed(spark, monkeypatch, three, "48") == (want3, False)
+        assert self._routed(spark, monkeypatch, four, "48") == (want4, True)
+        assert self._routed(spark, monkeypatch, three, "-1") == (want3, True)
+
+    def test_driver_path_matches_star_and_bfs(self, spark):
+        # Random edge lists with duplicates, reversed edges and self-loops:
+        # the driver path, star contraction and a pure-Python BFS give the
+        # same labels.
+        from hypothesis import given, settings
+        from hypothesis import strategies as st
+
+        from pubsub2bq_spark.operators.llm_dedup import (
+            connected_components,
+            star_contraction_components,
         )
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in llm_dedup.adaptive_components(pairs).collect()
-        }
-        assert calls == ["dedup_clusters"], "probe did not trigger the switch"
-        assert got == {(i, 0) for i in range(n + 1)}
 
-    def test_adaptive_switch_seeds_star_from_probe(self, spark, monkeypatch):
-        # On a switch the probe's partial labels must contract the graph
-        # BEFORE star runs (VERDICT r11 #1: the probe pays for itself):
-        # star receives label-vertices, never more edges than the input,
-        # and the mapped-back output is still the shared fixpoint. Shape:
-        # a deep path (forces the switch) + attached wide stars (the
-        # probe fully collapses these in its 2 rounds, so contraction
-        # must shrink the edge set star sees).
-        from pubsub2bq_spark.operators import llm_dedup
+        def bfs_labels(edge_list):
+            adj: dict[int, set[int]] = {}
+            for s, d in edge_list:
+                adj.setdefault(s, set()).add(d)
+                adj.setdefault(d, set()).add(s)
+            out = set()
+            for v in adj:
+                seen, todo = {v}, [v]
+                while todo:
+                    for w in adj[todo.pop()] - seen:
+                        seen.add(w)
+                        todo.append(w)
+                out.add((v, min(seen)))
+            return out
 
-        seen = {}
-        real = llm_dedup.star_contraction_components
+        ids = st.integers(0, 15)
 
-        def spy(pairs, op_name="dedup_clusters"):
-            seen["n_edges"] = pairs.count()
-            return real(pairs, op_name)
+        @given(st.lists(st.tuples(ids, ids), min_size=1, max_size=14))
+        @settings(max_examples=8, deadline=None)
+        def check(edge_list):
+            pairs = spark.createDataFrame(edge_list, "src long, dst long")
+            want = bfs_labels(edge_list)
+            assert self._labels(connected_components(pairs, "t")) == want
+            assert self._labels(star_contraction_components(pairs)) == want
 
-        monkeypatch.setattr(llm_dedup, "star_contraction_components", spy)
-        n = 300
-        path = [(i, i + 1) for i in range(n)]
-        # 40 spokes hung off vertex 0: collapsed by the probe round 1.
-        stars = [(0, 1000 + j) for j in range(40)]
-        pairs = spark.createDataFrame(path + stars, "src long, dst long")
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in llm_dedup.adaptive_components(pairs).collect()
-        }
-        assert "n_edges" in seen, "probe did not trigger the switch"
-        assert seen["n_edges"] < len(path) + len(stars), (
-            "star received the raw pairs — probe labels were discarded"
-        )
-        want = {(i, 0) for i in range(n + 1)} | {
-            (1000 + j, 0) for j in range(40)
-        }
-        assert got == want
-
-    def test_adaptive_keeps_min_label_on_shallow_graph(self, spark, monkeypatch):
-        # Star/shallow graphs converge inside the probe — the selector
-        # must NOT pay a star restart there (the text minhash case).
-        from pubsub2bq_spark.operators import llm_dedup
-
-        def boom(pairs, op_name="dedup_clusters"):
-            raise AssertionError("star must not run on a shallow graph")
-
-        monkeypatch.setattr(llm_dedup, "star_contraction_components", boom)
-        pairs = spark.createDataFrame(
-            [(100, i) for i in range(5, 10)] + [(200, 201), (201, 202)],
-            "src long, dst long",
-        )
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in llm_dedup.adaptive_components(pairs).collect()
-        }
-        assert got == {(i, 5) for i in range(5, 10)} | {(100, 5)} | {
-            (200, 200), (201, 200), (202, 200)
-        }
-
-    def test_adaptive_small_tail_finishes_in_min_label(self, spark, monkeypatch):
-        # A frontier below _ADAPTIVE_MIN_FRONTIER never switches even
-        # when the shrink ratio is high: the tail is cheaper to finish
-        # in min-label than a star restart.
-        from pubsub2bq_spark.operators import llm_dedup
-
-        def boom(pairs, op_name="dedup_clusters"):
-            raise AssertionError("star must not run under the frontier floor")
-
-        monkeypatch.setattr(llm_dedup, "star_contraction_components", boom)
-        # diameter-20 path: slow shrink ratio but frontier ≤ 21 < 64
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(20)], "src long, dst long"
-        )
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in llm_dedup.adaptive_components(pairs).collect()
-        }
-        assert got == {(i, 0) for i in range(21)}
+        check()
 
     def test_finish_nonconvergence_resumes_contraction(self, spark, monkeypatch):
         # Force the worst shape: finish gets only 2 rounds (covers
