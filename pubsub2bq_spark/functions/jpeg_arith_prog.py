@@ -1,6 +1,5 @@
 """Arithmetic-coded PROGRESSIVE JPEG (SOF10) — the last cell of the
-T.81 process matrix (VERDICT r13 #7: composition of two existing
-machinery halves).
+T.81 process matrix, composed from two existing machinery halves.
 
 Both halves already exist in this engine: the QM-coder with the Annex F
 DC/AC statistical models (functions/jpeg_arith.py, SOF9) and the

@@ -1,5 +1,5 @@
 """MPEG-1 Audio Layer II codec (ISO/IEC 11172-3) for the multimodal
-audio verbs — the perceptual-audio family member (VERDICT r13 #6a).
+audio verbs — the perceptual-audio family member.
 
 Layer II is the first PERCEPTUAL codec in the engine: unlike
 FLAC/ADPCM/G.711 the stream does not carry samples but quantized

@@ -44,6 +44,10 @@ Codec coverage is split honestly:
   unless a real decoder library (PIL) imports — the container has
   none, and pretending otherwise would be worse.
 
+Every codec kernel is a per-document row function behind one adapter,
+:func:`payload_kernel`, which owns the Arrow batch loop and builds each
+batch's output frame with the dtypes its DDL schema states.
+
 ``fake_decode_meta`` remains as the deterministic stand-in used by the
 pure-plumbing keys (multimodal_meta / frame_sample), whose oracles
 restate its byte-length arithmetic.
@@ -51,9 +55,8 @@ restate its byte-length arithmetic.
 
 from __future__ import annotations
 
-import hashlib
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -61,7 +64,6 @@ import pandas as pd
 from pubsub2bq_spark.functions.jpeg_codec import (
     JPEG_SIG,
     decode_jpeg,
-    encode_jpeg_gray,
     synth_jpeg_from_bytes,
 )
 from pubsub2bq_spark.functions.png_codec import (
@@ -80,6 +82,61 @@ try:  # pragma: no cover - not installed in this container
     _HAS_PIL = True
 except ImportError:
     _HAS_PIL = False
+
+
+# DDL type -> pandas dtype of a kernel's output column
+_PANDAS_DTYPES = {"bigint": "int64", "int": "int32", "double": "float64", "string": object}
+
+
+def payload_kernel(
+    schema: str, rows_of: Callable[[int, bytes], list[tuple]]
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """Wrap a per-document row function as a ``mapInPandas`` kernel.
+
+    For each ``(doc_id, payload)`` of a batch, ``rows_of(doc_id,
+    payload)`` returns that document's output rows as tuples in
+    ``schema`` order: one row for a feature kernel, one per frame for a
+    frame kernel. Each Arrow batch in yields one pandas frame out, with
+    every column's dtype taken from the DDL ``schema`` — so an empty
+    batch carries the same dtypes as a full one. A DDL type with no
+    entry in ``_PANDAS_DTYPES`` raises here, at import.
+
+    A row function named ``_<name>_rows`` gives a kernel named
+    ``<name>_batches``, which must be the module attribute it is bound
+    to: Spark prints that name in plans, and cloudpickle finds the
+    kernel under it, so workers import it instead of unpickling a copy.
+    """
+    columns = []
+    for field in schema.split(","):
+        name, ddl = field.split()
+        if ddl not in _PANDAS_DTYPES:
+            raise ValueError(f"payload_kernel: no pandas dtype for {ddl!r} in {schema!r}")
+        columns.append((name, _PANDAS_DTYPES[ddl]))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                row
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                for row in rows_of(doc_id, payload)
+            ]
+            values = list(zip(*rows)) or [()] * len(columns)
+            yield pd.DataFrame(
+                {name: pd.Series(col, dtype=dt) for (name, dt), col in zip(columns, values)}
+            )
+
+    public = rows_of.__name__.removeprefix("_").removesuffix("_rows") + "_batches"
+    kernel.__name__ = kernel.__qualname__ = public
+    kernel.__doc__ = rows_of.__doc__
+    return kernel
+
+
+def _fixture_dims(payload: bytes) -> tuple[int, int, int]:
+    """The text fixtures' byte-length dimension rule: ``(n, w, h)`` with
+    ``n = len(payload)``, ``w = n % 64 + 16`` and ``h = (n // 64) % 64
+    + 16``. The oracle SQL restates it."""
+    n = len(payload)
+    return n, n % 64 + 16, (n // 64) % 64 + 16
 
 
 def decode_image(payload: bytes) -> tuple[int, int, int, np.ndarray]:
@@ -134,12 +191,12 @@ def fake_decode_meta(payload: bytes) -> dict:
     Derives pseudo-dimensions from the byte length only — reproducible
     on any engine, so oracle SQL can state the same arithmetic.
     """
-    n = len(payload)
+    n, w, h = _fixture_dims(payload)
     return {
         "n_bytes": n,
         "header_hex": payload[:4].hex(),
-        "width": n % 64 + 16,
-        "height": (n // 64) % 64 + 16,
+        "width": w,
+        "height": h,
         "n_frames": n % 5 + 1,
     }
 
@@ -155,36 +212,25 @@ def synth_png_from_bytes(payload: bytes) -> bytes:
     ``w*h*(w+h-2)/2`` while the decoder genuinely inflates and
     defilters the file.
     """
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    _n, w, h = _fixture_dims(payload)
     px = np.add.outer(np.arange(h, dtype=np.uint8), np.arange(w, dtype=np.uint8))
     return encode_png(px)
-
-
-def decode_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: binary `payload` (+ passthrough `doc_id`) →
-    typed metadata. One Arrow batch in, one out — no per-row Python calls
-    into the JVM."""
-    for pdf in batches:
-        metas = pdf["payload"].map(fake_decode_meta)
-        out = pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": metas.map(lambda m: m["n_bytes"]).astype("int64"),
-                "header_hex": metas.map(lambda m: m["header_hex"]),
-                "width": metas.map(lambda m: m["width"]).astype("int32"),
-                "height": metas.map(lambda m: m["height"]).astype("int32"),
-                "n_frames": metas.map(lambda m: m["n_frames"]).astype("int32"),
-            }
-        )
-        yield out
 
 
 DECODE_META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, header_hex string, "
     "width int, height int, n_frames int"
 )
+
+
+def _decode_meta_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """Binary ``payload`` (+ passthrough ``doc_id``) → typed metadata from
+    the byte-length stand-in :func:`fake_decode_meta`."""
+    m = fake_decode_meta(payload)
+    return [(doc_id, m["n_bytes"], m["header_hex"], m["width"], m["height"], m["n_frames"])]
+
+
+decode_meta_batches = payload_kernel(DECODE_META_SCHEMA, _decode_meta_rows)
 
 RESIZE_TARGET = 224  # max output side (the ViT/CNN preprocessing default)
 
@@ -246,222 +292,83 @@ def resize_image(payload: bytes, target: int = RESIZE_TARGET) -> bytes:
     )
 
 
-def fake_resize_meta(payload: bytes, target: int = RESIZE_TARGET) -> dict:
-    """Deterministic stand-in for the resize step's metadata: the
-    aspect-preserving max-side-`target` output dimensions, in exact
-    integer arithmetic (floor division) so oracle SQL states the same
-    numbers."""
-    m = fake_decode_meta(payload)
-    w, h = m["width"], m["height"]
-    long_side = max(w, h)
-    out_w = max(1, (w * target) // long_side)
-    out_h = max(1, (h * target) // long_side)
-    return {
-        "n_bytes": m["n_bytes"],
-        "width": w,
-        "height": h,
-        "out_w": out_w,
-        "out_h": out_h,
-    }
-
-
-def png_resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the REAL image path: synthesize a PNG per
-    payload (dims from the byte-length rule), then run the full honest
-    loop — decode (inflate + defilter), pixel-sum the decoded image,
-    nearest-neighbor resize, re-encode, and re-decode the output to
-    report its measured dimensions. Every reported number comes out of
-    a decoder, not out of the generation rule."""
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [], "out_w": [], "out_h": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            png = synth_png_from_bytes(payload)
-            w, h, _ch, px = decode_png(png)
-            resized = resize_image(png)
-            out_w, out_h, _oc, _opx = decode_png(resized)
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-            rows["out_w"].append(out_w)
-            rows["out_h"].append(out_h)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-                "out_w": pd.Series(rows["out_w"], dtype="int32"),
-                "out_h": pd.Series(rows["out_h"], dtype="int32"),
-            }
-        )
-
-
 PNG_RESIZE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, width int, height int, "
     "px_sum bigint, out_w int, out_h int"
 )
 
 
-def jpeg_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the REAL baseline-JPEG path (r12, the
-    JPEG twin of png_resize_batches): synthesize a baseline JPEG per
-    payload (block-constant pixels — see synth_jpeg_from_bytes for why
-    the lossy pipeline is exact on them), then genuinely decode it
-    (marker parse, Annex-K Huffman, dequant, IDCT), pixel-sum the
-    decoded image, resize via the generic resize_image verb (which
-    transcodes JPEG thumbnails to PNG — see its JPEG branch), and
-    re-decode the output for its measured dimensions. Every reported
-    number comes out of a decoder."""
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [], "out_w": [], "out_h": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            jp = synth_jpeg_from_bytes(payload)
-            w, h, _ch, px = decode_jpeg(jp)
-            out_w, out_h, _oc, _opx = decode_image(resize_image(jp))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-            rows["out_w"].append(out_w)
-            rows["out_h"].append(out_h)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-                "out_w": pd.Series(rows["out_w"], dtype="int32"),
-                "out_h": pd.Series(rows["out_h"], dtype="int32"),
-            }
-        )
+def _png_resize_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The REAL image path: synthesize a PNG per payload (dims from the
+    byte-length rule), then run the full honest loop — decode (inflate +
+    defilter), pixel-sum the decoded image, nearest-neighbor resize,
+    re-encode, and re-decode the output to report its measured
+    dimensions. Every reported number comes out of a decoder, not out of
+    the generation rule."""
+    png = synth_png_from_bytes(payload)
+    w, h, _ch, px = decode_png(png)
+    out_w, out_h, _oc, _opx = decode_png(resize_image(png))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)), out_w, out_h)]
 
+
+png_resize_batches = payload_kernel(PNG_RESIZE_SCHEMA, _png_resize_rows)
+
+
+def _jpeg_decode_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The REAL baseline-JPEG path (r12, the JPEG twin of
+    png_resize_batches): synthesize a baseline JPEG per payload
+    (block-constant pixels — see synth_jpeg_from_bytes for why the lossy
+    pipeline is exact on them), then genuinely decode it (marker parse,
+    Annex-K Huffman, dequant, IDCT), pixel-sum the decoded image, resize
+    via the generic resize_image verb (which transcodes JPEG thumbnails
+    to PNG — see its JPEG branch), and re-decode the output for its
+    measured dimensions. Every reported number comes out of a decoder."""
+    jp = synth_jpeg_from_bytes(payload)
+    w, h, _ch, px = decode_jpeg(jp)
+    out_w, out_h, _oc, _opx = decode_image(resize_image(jp))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)), out_w, out_h)]
+
+
+jpeg_decode_batches = payload_kernel(PNG_RESIZE_SCHEMA, _jpeg_decode_rows)
 
 JPEG_PROG_SCHEMA = (
     "doc_id bigint, n_bytes bigint, width int, height int, px_sum bigint"
 )
 
 
-def jpeg_progressive_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the PROGRESSIVE JPEG path (r13):
-    synthesize a real four-scan SOF2 stream per payload
-    (block-constant pixels — see synth_jpeg_progressive_from_bytes for
-    why the successive-approximation pipeline is exact on them), then
-    genuinely decode it — marker walk across the multiple SOS
-    segments, DC first + refinement and AC first + refinement scan
-    decode over the shared coefficient array, dequantize, IDCT — and
-    pixel-sum the decoded image."""
-    from pubsub2bq_spark.functions.jpeg_codec import (
-        decode_jpeg,
-        synth_jpeg_progressive_from_bytes,
-    )
+def _jpeg_progressive_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The PROGRESSIVE JPEG path (r13): synthesize a real four-scan SOF2
+    stream per payload (block-constant pixels — see
+    synth_jpeg_progressive_from_bytes for why the successive-approximation
+    pipeline is exact on them), then genuinely decode it — marker walk
+    across the multiple SOS segments, DC first + refinement and AC first
+    + refinement scan decode over the shared coefficient array,
+    dequantize, IDCT — and pixel-sum the decoded image."""
+    from pubsub2bq_spark.functions.jpeg_codec import synth_jpeg_progressive_from_bytes
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, _ch, px = decode_jpeg(synth_jpeg_progressive_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    w, h, _ch, px = decode_jpeg(synth_jpeg_progressive_from_bytes(payload))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)))]
 
 
-def jpeg_hier_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the HIERARCHICAL (T.81 Annex J) JPEG path
-    (r13, the last Huffman JPEG mode): synthesize a real two-stage
-    DHP/EXP pyramid per payload (constant reduced frame + block-constant
-    differential target — see synth_jpeg_hier_from_bytes for why the
-    two-stage lossy pipeline is exact on them), then genuinely decode it
-    — multi-frame marker walk, sequential Huffman scan per frame, the
-    normative J.1.1.2 expansion, differential reconstruction without
-    level shift — and pixel-sum the decoded image."""
-    from pubsub2bq_spark.functions.jpeg_codec import decode_jpeg
+jpeg_progressive_batches = payload_kernel(JPEG_PROG_SCHEMA, _jpeg_progressive_rows)
+
+
+def _jpeg_hier_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The HIERARCHICAL (T.81 Annex J) JPEG path (r13, the last Huffman
+    JPEG mode): synthesize a real two-stage DHP/EXP pyramid per payload
+    (constant reduced frame + block-constant differential target — see
+    synth_jpeg_hier_from_bytes for why the two-stage lossy pipeline is
+    exact on them), then genuinely decode it — multi-frame marker walk,
+    sequential Huffman scan per frame, the normative J.1.1.2 expansion,
+    differential reconstruction without level shift — and pixel-sum the
+    decoded image."""
     from pubsub2bq_spark.functions.jpeg_hier import synth_jpeg_hier_from_bytes
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, _ch, px = decode_jpeg(synth_jpeg_hier_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    w, h, _ch, px = decode_jpeg(synth_jpeg_hier_from_bytes(payload))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)))]
 
 
-def jpeg_progressive_420_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the PROGRESSIVE 4:2:0 COLOR JPEG path
-    (r13): synthesize an 8-scan SOF2 4:2:0 stream per payload
-    (interleaved DC scans + per-component AC scans — the libjpeg
-    default script), genuinely decode it (multi-scan marker walk,
-    per-component coefficient stores, chroma upsample), and sum each
-    decoded full-resolution plane."""
-    from pubsub2bq_spark.functions.jpeg_codec import (
-        decode_jpeg_planes,
-        synth_jpeg_progressive_420_from_bytes,
-    )
-
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "y_sum": [], "cb_sum": [], "cr_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            jp = synth_jpeg_progressive_420_from_bytes(payload)
-            w, h, planes = decode_jpeg_planes(jp)
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["y_sum"].append(int(planes[0].sum(dtype=np.int64)))
-            rows["cb_sum"].append(int(planes[1].sum(dtype=np.int64)))
-            rows["cr_sum"].append(int(planes[2].sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "y_sum": pd.Series(rows["y_sum"], dtype="int64"),
-                "cb_sum": pd.Series(rows["cb_sum"], dtype="int64"),
-                "cr_sum": pd.Series(rows["cr_sum"], dtype="int64"),
-            }
-        )
+jpeg_hier_batches = payload_kernel(JPEG_PROG_SCHEMA, _jpeg_hier_rows)
 
 
 JPEG420_SCHEMA = (
@@ -470,83 +377,62 @@ JPEG420_SCHEMA = (
 )
 
 
-def jpeg420_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the 4:2:0 chroma-subsampled JPEG path
-    (VERDICT r12 #3): synthesize a real 4:2:0 color JPEG per payload
-    (macroblock-constant chroma — see synth_jpeg420_from_bytes for why
-    the subsampled lossy pipeline is exact on them), genuinely decode
-    it (MCU-interleaved Annex-K Huffman over Y/Cb/Cr with chrominance
-    tables, dequant, IDCT, replication chroma upsample), and sum each
-    decoded FULL-RESOLUTION plane. Every reported number comes out of
-    the decoder."""
-    from pubsub2bq_spark.functions.jpeg_codec import (
-        decode_jpeg_planes,
-        synth_jpeg420_from_bytes,
-    )
+def _plane_sum_rows(doc_id: int, payload: bytes, jp: bytes) -> list[tuple]:
+    """One JPEG420_SCHEMA row: decode the color JPEG ``jp`` synthesized
+    from ``payload`` and sum each decoded FULL-RESOLUTION plane."""
+    from pubsub2bq_spark.functions.jpeg_codec import decode_jpeg_planes
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "y_sum": [], "cb_sum": [], "cr_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            jp = synth_jpeg420_from_bytes(payload)
-            w, h, planes = decode_jpeg_planes(jp)
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["y_sum"].append(int(planes[0].sum(dtype=np.int64)))
-            rows["cb_sum"].append(int(planes[1].sum(dtype=np.int64)))
-            rows["cr_sum"].append(int(planes[2].sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "y_sum": pd.Series(rows["y_sum"], dtype="int64"),
-                "cb_sum": pd.Series(rows["cb_sum"], dtype="int64"),
-                "cr_sum": pd.Series(rows["cr_sum"], dtype="int64"),
-            }
-        )
+    w, h, planes = decode_jpeg_planes(jp)
+    return [(doc_id, len(payload), w, h, *(int(p.sum(dtype=np.int64)) for p in planes))]
 
 
-def jpeg_lossless_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the LOSSLESS JPEG path (r13): synthesize
-    a real SOF3 predictive stream per payload and decode it through
-    the general dispatch (functions/jpeg_codec.py routes SOF3 frames
-    to the Annex H decoder: Huffman residual categories, Table H.1
-    prediction, modulo-2^16 reconstruction), then pixel-sum the
-    decoded image. Lossless decode equals the synthesized pixels
-    exactly by construction."""
+def _jpeg_progressive_420_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The PROGRESSIVE 4:2:0 COLOR JPEG path (r13): synthesize an 8-scan
+    SOF2 4:2:0 stream per payload (interleaved DC scans + per-component
+    AC scans — the libjpeg default script), genuinely decode it
+    (multi-scan marker walk, per-component coefficient stores, chroma
+    upsample), and sum each decoded full-resolution plane."""
+    from pubsub2bq_spark.functions.jpeg_codec import synth_jpeg_progressive_420_from_bytes
+
+    return _plane_sum_rows(doc_id, payload, synth_jpeg_progressive_420_from_bytes(payload))
+
+
+jpeg_progressive_420_batches = payload_kernel(JPEG420_SCHEMA, _jpeg_progressive_420_rows)
+
+
+def _jpeg420_decode_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The 4:2:0 chroma-subsampled JPEG path: synthesize a real 4:2:0
+    color JPEG per payload (macroblock-constant chroma — see
+    synth_jpeg420_from_bytes for why the subsampled lossy pipeline is
+    exact on them), genuinely decode it (MCU-interleaved Annex-K Huffman
+    over Y/Cb/Cr with chrominance tables, dequant, IDCT, replication
+    chroma upsample), and sum each decoded FULL-RESOLUTION plane. Every
+    reported number comes out of the decoder."""
+    from pubsub2bq_spark.functions.jpeg_codec import synth_jpeg420_from_bytes
+
+    return _plane_sum_rows(doc_id, payload, synth_jpeg420_from_bytes(payload))
+
+
+jpeg420_decode_batches = payload_kernel(JPEG420_SCHEMA, _jpeg420_decode_rows)
+
+
+def _jpeg_lossless_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The LOSSLESS JPEG path (r13): synthesize a real SOF3 predictive
+    stream per payload and decode it through the general dispatch
+    (functions/jpeg_codec.py routes SOF3 frames to the Annex H decoder:
+    Huffman residual categories, Table H.1 prediction, modulo-2^16
+    reconstruction), then pixel-sum the decoded image. Lossless decode
+    equals the synthesized pixels exactly by construction."""
     from pubsub2bq_spark.functions.jpeg_codec import (
         decode_jpeg_planes,
         synth_jpeg_lossless_from_bytes,
     )
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            jp = synth_jpeg_lossless_from_bytes(payload)
-            w, h, planes = decode_jpeg_planes(jp)
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(planes[0].sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    w, h, planes = decode_jpeg_planes(synth_jpeg_lossless_from_bytes(payload))
+    return [(doc_id, len(payload), w, h, int(planes[0].sum(dtype=np.int64)))]
+
+
+jpeg_lossless_batches = payload_kernel(JPEG_PROG_SCHEMA, _jpeg_lossless_rows)
 
 
 def synth_tiff_from_bytes(payload: bytes) -> bytes:
@@ -556,43 +442,25 @@ def synth_tiff_from_bytes(payload: bytes) -> bytes:
     the rule exactly and the oracle states Σpx over the block grid."""
     from pubsub2bq_spark.functions.tiff_codec import encode_tiff
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     bx = np.arange(w) // 8
     by = np.arange(h) // 8
     px = ((9 * bx[None, :] + 7 * by[:, None] + n) % 256).astype(np.uint8)
     return encode_tiff(px)
 
 
-def tiff_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the TIFF path (r13): synthesize a real
-    multi-strip LZW TIFF per payload, genuinely walk the IFD, assemble
-    strips and invert the early-change LZW (functions/tiff_codec.py),
-    then pixel-sum the decoded image."""
+def _tiff_decode_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The TIFF path (r13): synthesize a real multi-strip LZW TIFF per
+    payload, genuinely walk the IFD, assemble strips and invert the
+    early-change LZW (functions/tiff_codec.py), then pixel-sum the
+    decoded image."""
     from pubsub2bq_spark.functions.tiff_codec import decode_tiff
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px = decode_tiff(synth_tiff_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    w, h, px = decode_tiff(synth_tiff_from_bytes(payload))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)))]
+
+
+tiff_decode_batches = payload_kernel(JPEG_PROG_SCHEMA, _tiff_decode_rows)
 
 
 def synth_qoi_from_bytes(payload: bytes) -> bytes:
@@ -603,9 +471,7 @@ def synth_qoi_from_bytes(payload: bytes) -> bytes:
     states all three channel sums in closed form."""
     from pubsub2bq_spark.functions.qoi_codec import encode_qoi
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     bx = np.arange(w) // 8
     by = np.arange(h) // 8
     r = (11 * bx[None, :] + 3 * by[:, None] + n) % 256
@@ -620,99 +486,35 @@ QOI_SCHEMA = (
 )
 
 
-def qoi_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the QOI path (r13): synthesize a real QOI
-    image per payload, genuinely decode the op stream (hash-index
-    replay, DIFF/LUMA deltas, runs — functions/qoi_codec.py), and sum
-    each decoded channel."""
+def _qoi_decode_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The QOI path (r13): synthesize a real QOI image per payload,
+    genuinely decode the op stream (hash-index replay, DIFF/LUMA deltas,
+    runs — functions/qoi_codec.py), and sum each decoded channel."""
     from pubsub2bq_spark.functions.qoi_codec import decode_qoi
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "r_sum": [], "g_sum": [], "b_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, _ch, px = decode_qoi(synth_qoi_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["r_sum"].append(int(px[:, :, 0].sum(dtype=np.int64)))
-            rows["g_sum"].append(int(px[:, :, 1].sum(dtype=np.int64)))
-            rows["b_sum"].append(int(px[:, :, 2].sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "r_sum": pd.Series(rows["r_sum"], dtype="int64"),
-                "g_sum": pd.Series(rows["g_sum"], dtype="int64"),
-                "b_sum": pd.Series(rows["b_sum"], dtype="int64"),
-            }
-        )
+    w, h, _ch, px = decode_qoi(synth_qoi_from_bytes(payload))
+    sums = (int(px[:, :, c].sum(dtype=np.int64)) for c in range(3))
+    return [(doc_id, len(payload), w, h, *sums)]
 
 
-def jpeg_arith_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the ARITHMETIC-coded JPEG path (r13):
-    synthesize a real SOF9 4:2:0 color JPEG per payload and decode it
-    through the general dispatch (functions/jpeg_codec.py routes SOF9
-    frames to the QM-coder decoder in functions/jpeg_arith.py —
-    adaptive statistics bins, conditional exchange, renormalization,
-    stuffed-bit input), then sum each decoded full-resolution plane.
-    Every reported number comes out of the arithmetic decoder."""
+qoi_decode_batches = payload_kernel(QOI_SCHEMA, _qoi_decode_rows)
+
+
+def _jpeg_arith_decode_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The ARITHMETIC-coded JPEG path (r13): synthesize a real SOF9 4:2:0
+    color JPEG per payload and decode it through the general dispatch
+    (functions/jpeg_codec.py routes SOF9 frames to the QM-coder decoder
+    in functions/jpeg_arith.py — adaptive statistics bins, conditional
+    exchange, renormalization, stuffed-bit input), then sum each decoded
+    full-resolution plane. Every reported number comes out of the
+    arithmetic decoder."""
     from pubsub2bq_spark.functions.jpeg_arith import synth_jpeg_arith_from_bytes
-    from pubsub2bq_spark.functions.jpeg_codec import decode_jpeg_planes
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "y_sum": [], "cb_sum": [], "cr_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            jp = synth_jpeg_arith_from_bytes(payload)
-            w, h, planes = decode_jpeg_planes(jp)
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["y_sum"].append(int(planes[0].sum(dtype=np.int64)))
-            rows["cb_sum"].append(int(planes[1].sum(dtype=np.int64)))
-            rows["cr_sum"].append(int(planes[2].sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "y_sum": pd.Series(rows["y_sum"], dtype="int64"),
-                "cb_sum": pd.Series(rows["cb_sum"], dtype="int64"),
-                "cr_sum": pd.Series(rows["cr_sum"], dtype="int64"),
-            }
-        )
+    return _plane_sum_rows(doc_id, payload, synth_jpeg_arith_from_bytes(payload))
 
 
-def resize_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: binary `payload` → resize-plan metadata
-    (byte-length rule only — the plumbing twin of png_resize_batches)."""
-    for pdf in batches:
-        metas = pdf["payload"].map(fake_resize_meta)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": metas.map(lambda m: m["n_bytes"]).astype("int64"),
-                "width": metas.map(lambda m: m["width"]).astype("int32"),
-                "height": metas.map(lambda m: m["height"]).astype("int32"),
-                "out_w": metas.map(lambda m: m["out_w"]).astype("int32"),
-                "out_h": metas.map(lambda m: m["out_h"]).astype("int32"),
-            }
-        )
+jpeg_arith_decode_batches = payload_kernel(JPEG420_SCHEMA, _jpeg_arith_decode_rows)
 
-
-RESIZE_META_SCHEMA = (
-    "doc_id bigint, n_bytes bigint, width int, height int, out_w int, out_h int"
-)
 
 # Sample-synthesis constants for the real WAV path. Knuth's 2^32/phi
 # multiplier spreads consecutive indices across the 16-bit range; both
@@ -773,7 +575,7 @@ def extract_audio_features(payload: bytes) -> dict:
                         # A well-formed WAV whose wFormatTag has no
                         # decoder here (MS-ADPCM 2, MP3-in-WAV 0x55, …)
                         # is the documented unsupported-codec gate, not
-                        # a malformed file (ADVICE r13).
+                        # a malformed file.
                         tag = wav_format_tag(payload)
                         if tag is not None and tag not in SUPPORTED_WAV_TAGS:
                             raise NotImplementedError(
@@ -846,45 +648,28 @@ def extract_audio_features(payload: bytes) -> dict:
     )
 
 
-def fake_audio_features(payload: bytes) -> dict:
-    """Deterministic stand-in for an audio feature extractor: a pseudo
-    RMS level derived from the payload's md5 (first 8 hex digits as a
-    32-bit fraction) plus a window count from the byte length. md5 is
-    engine-portable and k/2^32 is EXACTLY representable as a double
-    (k < 2^53), so the oracle restates the identical bits with no
-    rounding — deliberately un-rounded, because Python's round() is
-    half-to-even while SQL round() is half-away-from-zero and the two
-    disagree on exact ties."""
+AUDIO_FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, n_windows bigint, rms double"
+
+
+def _wav_feature_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The REAL audio path: synthesize a WAV per payload, parse the RIFF
+    container + PCM frames with the stdlib reader, and compute the RMS
+    feature from the DECODED samples."""
     n = len(payload)
-    h = hashlib.md5(payload).hexdigest()
-    return {
-        "n_bytes": n,
-        "n_windows": n // 256 + 1,
-        "rms": int(h[:8], 16) / 4294967296.0,
-    }
+    feats = extract_audio_features(synth_wav_from_bytes(payload))
+    return [(doc_id, n, n // 256 + 1, feats["rms"])]
 
 
-def wav_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the REAL audio path: synthesize a WAV per
-    payload, parse the RIFF container + PCM frames with the stdlib
-    reader, and compute the RMS feature from the DECODED samples."""
-    for pdf in batches:
-        rows = {"doc_id": [], "n_bytes": [], "n_windows": [], "rms": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            n = len(payload)
-            feats = extract_audio_features(synth_wav_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(n)
-            rows["n_windows"].append(n // 256 + 1)
-            rows["rms"].append(feats["rms"])
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "n_windows": pd.Series(rows["n_windows"], dtype="int64"),
-                "rms": pd.Series(rows["rms"], dtype="float64"),
-            }
-        )
+wav_feature_batches = payload_kernel(AUDIO_FEATURE_SCHEMA, _wav_feature_rows)
+
+
+def _decoded_audio_rows(doc_id: int, payload: bytes, lin: np.ndarray, *middle) -> list[tuple]:
+    """One ``(doc_id, n_bytes, n_samples, *middle, sum_sq, rms)`` row from
+    the DECODED samples ``lin``. The sum of squares is exact int64, so
+    ``sqrt(sum_sq/n)/32768`` is bit-identical across engines."""
+    sum_sq = int(np.sum(lin * lin))
+    rms = math.sqrt(sum_sq / lin.size) / 32768.0 if lin.size else 0.0
+    return [(doc_id, len(payload), int(lin.size), *middle, sum_sq, rms)]
 
 
 def synth_mulaw_wav_from_bytes(payload: bytes) -> bytes:
@@ -907,39 +692,18 @@ MULAW_SCHEMA = (
 )
 
 
-def mulaw_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the COMPRESSED audio path (r13): synthesize
-    a µ-law WAV per payload, genuinely walk the RIFF container (manual
-    parse — the stdlib reader rejects non-PCM formats) and expand every
-    G.711 code byte to its linear sample, then compute RMS from the
-    DECODED samples. The sum of squares is exact int64, so
-    sqrt(sum_sq/n)/32768 is bit-identical across engines."""
+def _mulaw_feature_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The COMPRESSED audio path (r13): synthesize a µ-law WAV per
+    payload, genuinely walk the RIFF container (manual parse — the stdlib
+    reader rejects non-PCM formats) and expand every G.711 code byte to
+    its linear sample, then compute RMS from the DECODED samples."""
     from pubsub2bq_spark.functions.wav_codec import decode_wav_mulaw
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "n_samples": [], "sum_sq": [],
-            "rms": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, lin = decode_wav_mulaw(synth_mulaw_wav_from_bytes(payload))
-            sum_sq = int(np.sum(lin * lin))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["n_samples"].append(int(lin.size))
-            rows["sum_sq"].append(sum_sq)
-            rows["rms"].append(
-                math.sqrt(sum_sq / lin.size) / 32768.0 if lin.size else 0.0
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                "rms": pd.Series(rows["rms"], dtype="float64"),
-            }
-        )
+    _rate, lin = decode_wav_mulaw(synth_mulaw_wav_from_bytes(payload))
+    return _decoded_audio_rows(doc_id, payload, lin)
+
+
+mulaw_feature_batches = payload_kernel(MULAW_SCHEMA, _mulaw_feature_rows)
 
 
 def synth_alaw_wav_from_bytes(payload: bytes) -> bytes:
@@ -957,39 +721,18 @@ def synth_alaw_wav_from_bytes(payload: bytes) -> bytes:
     return encode_wav_alaw(((i * _WAV_MULT + n) % 256).astype(np.uint8))
 
 
-def alaw_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the A-law audio path (r13): synthesize an
-    A-law WAV per payload, genuinely walk the RIFF container and expand
-    every G.711 code byte (XOR 0x55, segment shift — wav_codec.py),
-    then compute RMS from the DECODED samples. The sum of squares is
-    exact int64, so sqrt(sum_sq/n)/32768 is bit-identical across
-    engines."""
+def _alaw_feature_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The A-law audio path (r13): synthesize an A-law WAV per payload,
+    genuinely walk the RIFF container and expand every G.711 code byte
+    (XOR 0x55, segment shift — wav_codec.py), then compute RMS from the
+    DECODED samples."""
     from pubsub2bq_spark.functions.wav_codec import decode_wav_alaw
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "n_samples": [], "sum_sq": [],
-            "rms": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, lin = decode_wav_alaw(synth_alaw_wav_from_bytes(payload))
-            sum_sq = int(np.sum(lin * lin))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["n_samples"].append(int(lin.size))
-            rows["sum_sq"].append(sum_sq)
-            rows["rms"].append(
-                math.sqrt(sum_sq / lin.size) / 32768.0 if lin.size else 0.0
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                "rms": pd.Series(rows["rms"], dtype="float64"),
-            }
-        )
+    _rate, lin = decode_wav_alaw(synth_alaw_wav_from_bytes(payload))
+    return _decoded_audio_rows(doc_id, payload, lin)
+
+
+alaw_feature_batches = payload_kernel(MULAW_SCHEMA, _alaw_feature_rows)
 
 
 _ADPCM_NIBBLE_CAP = 2048  # nibble pairs; bounds |cumsum| << int16 clamp
@@ -1029,41 +772,19 @@ ADPCM_SCHEMA = (
 )
 
 
-def adpcm_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the ADPCM audio path (r13): synthesize an
-    IMA ADPCM WAV per payload, genuinely walk the RIFF container and
-    run the full IMA quantizer recurrence (step table, index adapt,
-    int16 clamp — functions/wav_codec.py), then report sample stats
-    from the DECODED samples. Sums are exact int64, so the rms double
-    is bit-identical across engines."""
+def _adpcm_feature_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The ADPCM audio path (r13): synthesize an IMA ADPCM WAV per
+    payload, genuinely walk the RIFF container and run the full IMA
+    quantizer recurrence (step table, index adapt, int16 clamp —
+    functions/wav_codec.py), then report sample stats from the DECODED
+    samples."""
     from pubsub2bq_spark.functions.wav_codec import decode_wav_adpcm
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "n_samples": [],
-            "sum_samples": [], "sum_sq": [], "rms": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, lin = decode_wav_adpcm(synth_adpcm_wav_from_bytes(payload))
-            sum_sq = int(np.sum(lin * lin))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["n_samples"].append(int(lin.size))
-            rows["sum_samples"].append(int(np.sum(lin)))
-            rows["sum_sq"].append(sum_sq)
-            rows["rms"].append(
-                math.sqrt(sum_sq / lin.size) / 32768.0 if lin.size else 0.0
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                "sum_samples": pd.Series(rows["sum_samples"], dtype="int64"),
-                "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                "rms": pd.Series(rows["rms"], dtype="float64"),
-            }
-        )
+    _rate, lin = decode_wav_adpcm(synth_adpcm_wav_from_bytes(payload))
+    return _decoded_audio_rows(doc_id, payload, lin, int(np.sum(lin)))
+
+
+adpcm_feature_batches = payload_kernel(ADPCM_SCHEMA, _adpcm_feature_rows)
 
 
 def synth_flac_from_bytes(payload: bytes) -> bytes:
@@ -1086,86 +807,22 @@ FLAC_SCHEMA = (
 )
 
 
-def flac_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the COMPRESSED LOSSLESS audio path (r13):
-    synthesize a FLAC stream per payload, genuinely decode it (frame
-    sync, CRC-8/CRC-16 verification, FIXED-predictor reconstruction,
-    Rice residuals, stream MD5 check — functions/flac_codec.py) and
-    compute RMS from the DECODED samples. Exact int64 sums keep the
-    rms double bit-identical across engines."""
+def _flac_feature_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The COMPRESSED LOSSLESS audio path (r13): synthesize a FLAC stream
+    per payload, genuinely decode it (frame sync, CRC-8/CRC-16
+    verification, FIXED-predictor reconstruction, Rice residuals, stream
+    MD5 check — functions/flac_codec.py) and compute RMS from the
+    DECODED samples."""
     from pubsub2bq_spark.functions.flac_codec import decode_flac
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "n_samples": [], "sum_sq": [],
-            "rms": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, lin = decode_flac(synth_flac_from_bytes(payload))
-            sum_sq = int(np.sum(lin * lin))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["n_samples"].append(int(lin.size))
-            rows["sum_sq"].append(sum_sq)
-            rows["rms"].append(
-                math.sqrt(sum_sq / lin.size) / 32768.0 if lin.size else 0.0
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                "rms": pd.Series(rows["rms"], dtype="float64"),
-            }
-        )
+    _rate, lin = decode_flac(synth_flac_from_bytes(payload))
+    return _decoded_audio_rows(doc_id, payload, lin)
+
+
+flac_feature_batches = payload_kernel(FLAC_SCHEMA, _flac_feature_rows)
 
 
 RESAMPLE_FACTOR = 2  # 16 kHz → 8 kHz decimation (the ASR downsample)
-
-
-def wav_resample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the REAL audio 'resample' verb: synthesize
-    a WAV per payload, decode it, decimate by RESAMPLE_FACTOR (every
-    k-th frame — the exact-integer downsample, so oracles restate it),
-    re-encode at rate/k, and RE-DECODE the output file — the reported
-    sample count and RMS come out of the second decode, not the rule."""
-    import math
-
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "sr_in": [], "sr_out": [],
-            "n_in": [], "n_out": [], "rms_out": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            n = len(payload)
-            rate_in, s_in = decode_wav_s16(synth_wav_from_bytes(payload))
-            resampled = encode_wav_s16(
-                s_in[::RESAMPLE_FACTOR], rate_in // RESAMPLE_FACTOR
-            )
-            rate_out, s_out = decode_wav_s16(resampled)
-            n_out = int(s_out.size)
-            sum_sq = int(np.sum(s_out.astype(np.int64) ** 2))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(n)
-            rows["sr_in"].append(rate_in)
-            rows["sr_out"].append(rate_out)
-            rows["n_in"].append(int(s_in.size))
-            rows["n_out"].append(n_out)
-            rows["rms_out"].append(
-                math.sqrt(sum_sq / n_out) / 32768.0 if n_out else 0.0
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "sr_in": pd.Series(rows["sr_in"], dtype="int32"),
-                "sr_out": pd.Series(rows["sr_out"], dtype="int32"),
-                "n_in": pd.Series(rows["n_in"], dtype="int64"),
-                "n_out": pd.Series(rows["n_out"], dtype="int64"),
-                "rms_out": pd.Series(rows["rms_out"], dtype="float64"),
-            }
-        )
 
 
 WAV_RESAMPLE_SCHEMA = (
@@ -1174,22 +831,22 @@ WAV_RESAMPLE_SCHEMA = (
 )
 
 
-def audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: binary `payload` → fixed-width feature row
-    (md5-rule stand-in — the plumbing twin of wav_feature_batches)."""
-    for pdf in batches:
-        feats = pdf["payload"].map(fake_audio_features)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": feats.map(lambda f: f["n_bytes"]).astype("int64"),
-                "n_windows": feats.map(lambda f: f["n_windows"]).astype("int64"),
-                "rms": feats.map(lambda f: f["rms"]).astype("float64"),
-            }
-        )
+def _wav_resample_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The REAL audio 'resample' verb: synthesize a WAV per payload,
+    decode it, decimate by RESAMPLE_FACTOR (every k-th frame — the
+    exact-integer downsample, so oracles restate it), re-encode at
+    rate/k, and RE-DECODE the output file — the reported sample count
+    and RMS come out of the second decode, not the rule."""
+    rate_in, s_in = decode_wav_s16(synth_wav_from_bytes(payload))
+    resampled = encode_wav_s16(s_in[::RESAMPLE_FACTOR], rate_in // RESAMPLE_FACTOR)
+    rate_out, s_out = decode_wav_s16(resampled)
+    n_out = int(s_out.size)
+    sum_sq = int(np.sum(s_out.astype(np.int64) ** 2))
+    rms_out = math.sqrt(sum_sq / n_out) / 32768.0 if n_out else 0.0
+    return [(doc_id, len(payload), rate_in, rate_out, int(s_in.size), n_out, rms_out)]
 
 
-AUDIO_FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, n_windows bigint, rms double"
+wav_resample_batches = payload_kernel(WAV_RESAMPLE_SCHEMA, _wav_resample_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1215,9 +872,7 @@ def synth_png_textured(payload: bytes, seed: int) -> bytes:
     (w = n%64+16, h = (n//64)%64+16) and per-document texture
     ``pixel(x, y) = ((173x + 199y + xy) % 256 + seed) % 256`` — a
     dimension-keyed scene under a document-keyed brightness shift."""
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    _n, w, h = _fixture_dims(payload)
     x = np.arange(w, dtype=np.int64)
     y = np.arange(h, dtype=np.int64)
     base = (173 * x[None, :] + 199 * y[:, None] + x[None, :] * y[:, None]) % 256
@@ -1225,41 +880,27 @@ def synth_png_textured(payload: bytes, seed: int) -> bytes:
     return encode_png(px)
 
 
-def phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the REAL image-hash path: synthesize a
-    textured PNG per payload, genuinely decode it (inflate + defilter),
-    nearest-neighbor downsample the DECODED pixels to the 8x8 aHash
-    grid, and threshold each cell against the strict grid mean
-    (``64*v > sum`` — integer-exact, so oracles restate it). Bits pack
-    row-major (k = j*8 + i) into two BIGINT halves like simhash."""
-    grid = PHASH_GRID
-    for pdf in batches:
-        rows = {"doc_id": [], "width": [], "height": [], "lo": [], "hi": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            png = synth_png_textured(payload, int(doc_id) % PHASH_SEED_MOD)
-            w, h, _ch, px = decode_png(png)
-            small = resize_nearest(px[:, :, 0], grid, grid).astype(np.int64)
-            total = int(small.sum())
-            flat = (small * (grid * grid) > total).reshape(-1)
-            lo = int(np.sum(flat[:32].astype(np.int64) << np.arange(32, dtype=np.int64)))
-            hi = int(np.sum(flat[32:].astype(np.int64) << np.arange(32, dtype=np.int64)))
-            rows["doc_id"].append(doc_id)
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["lo"].append(lo)
-            rows["hi"].append(hi)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "lo": pd.Series(rows["lo"], dtype="int64"),
-                "hi": pd.Series(rows["hi"], dtype="int64"),
-            }
-        )
-
-
 PHASH_SCHEMA = "doc_id bigint, width int, height int, lo bigint, hi bigint"
+
+
+def _phash_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The REAL image-hash path: synthesize a textured PNG per payload,
+    genuinely decode it (inflate + defilter), nearest-neighbor downsample
+    the DECODED pixels to the 8x8 aHash grid, and threshold each cell
+    against the strict grid mean (``64*v > sum`` — integer-exact, so
+    oracles restate it). Bits pack row-major (k = j*8 + i) into two
+    BIGINT halves like simhash."""
+    grid = PHASH_GRID
+    png = synth_png_textured(payload, int(doc_id) % PHASH_SEED_MOD)
+    w, h, _ch, px = decode_png(png)
+    small = resize_nearest(px[:, :, 0], grid, grid).astype(np.int64)
+    flat = (small * (grid * grid) > int(small.sum())).reshape(-1)
+    lo = int(np.sum(flat[:32].astype(np.int64) << np.arange(32, dtype=np.int64)))
+    hi = int(np.sum(flat[32:].astype(np.int64) << np.arange(32, dtype=np.int64)))
+    return [(doc_id, w, h, lo, hi)]
+
+
+phash_batches = payload_kernel(PHASH_SCHEMA, _phash_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1268,41 +909,26 @@ PHASH_SCHEMA = "doc_id bigint, width int, height int, lo bigint, hi bigint"
 
 AUDIO_FRAME_LEN = 16  # samples per analysis frame (hop == frame, no overlap)
 
-
-def wav_frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for frame-level audio features: synthesize a
-    WAV per payload, genuinely parse container + PCM frames, then emit
-    ONE ROW PER ANALYSIS FRAME (AUDIO_FRAME_LEN samples, hop == frame)
-    with the frame's sample count and RMS — the frame-feature layout
-    every speech pipeline (MFCC/fbank) produces. The sum of squares is
-    exact int64, so sqrt(sum_sq/cnt)/32768 is bit-identical on both
-    engines."""
-    import math
-
-    fl = AUDIO_FRAME_LEN
-    for pdf in batches:
-        rows = {"doc_id": [], "frame_idx": [], "n_in_frame": [], "rms": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, s = decode_wav_s16(synth_wav_from_bytes(payload))
-            s64 = s.astype(np.int64)
-            for f in range(0, s64.size, fl):
-                frame = s64[f : f + fl]
-                sum_sq = int(np.sum(frame * frame))
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(f // fl)
-                rows["n_in_frame"].append(int(frame.size))
-                rows["rms"].append(math.sqrt(sum_sq / frame.size) / 32768.0)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "n_in_frame": pd.Series(rows["n_in_frame"], dtype="int32"),
-                "rms": pd.Series(rows["rms"], dtype="float64"),
-            }
-        )
-
-
 AUDIO_FRAMES_SCHEMA = "doc_id bigint, frame_idx int, n_in_frame int, rms double"
+
+
+def _wav_frame_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """Frame-level audio features: synthesize a WAV per payload,
+    genuinely parse container + PCM frames, then emit ONE ROW PER
+    ANALYSIS FRAME (AUDIO_FRAME_LEN samples, hop == frame) with the
+    frame's sample count and RMS — the frame-feature layout every speech
+    pipeline (MFCC/fbank) produces. The sum of squares is exact int64, so
+    sqrt(sum_sq/cnt)/32768 is bit-identical on both engines."""
+    _rate, s = decode_wav_s16(synth_wav_from_bytes(payload))
+    s64 = s.astype(np.int64)
+    frames = (s64[f : f + AUDIO_FRAME_LEN] for f in range(0, s64.size, AUDIO_FRAME_LEN))
+    return [
+        (doc_id, i, int(fr.size), math.sqrt(int(np.sum(fr * fr)) / fr.size) / 32768.0)
+        for i, fr in enumerate(frames)
+    ]
+
+
+wav_frame_batches = payload_kernel(AUDIO_FRAMES_SCHEMA, _wav_frame_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1319,48 +945,36 @@ def synth_avi_from_bytes(payload: bytes) -> bytes:
     ``px_sum(f) = w*h*(w+h-2)/2 + w*h*f``)."""
     from pubsub2bq_spark.functions.avi_codec import encode_avi
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     n_frames = n % 5 + 1
     base = np.add.outer(np.arange(h, dtype=np.int64), np.arange(w, dtype=np.int64))
     frames = [(base + f).astype(np.uint8) for f in range(n_frames)]
     return encode_avi(frames)
 
 
-def video_frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the REAL video path: synthesize an AVI per
-    payload, genuinely parse the RIFF container (hdrl strf dims + movi
-    '00db' DIB frames, functions/avi_codec.py), and emit one row per
-    DECODED frame with its measured dimensions and pixel sum — every
+VIDEO_FRAMES_SCHEMA = (
+    "doc_id bigint, frame_idx int, width int, height int, px_sum bigint"
+)
+
+
+def _frame_sum_rows(doc_id: int, w: int, h: int, frames: list[np.ndarray]) -> list[tuple]:
+    """One VIDEO_FRAMES_SCHEMA row per DECODED frame: its index, the
+    measured dimensions and its pixel sum."""
+    return [(doc_id, f, w, h, int(frame.sum(dtype=np.int64))) for f, frame in enumerate(frames)]
+
+
+def _video_frame_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The REAL video path: synthesize an AVI per payload, genuinely parse
+    the RIFF container (hdrl strf dims + movi '00db' DIB frames,
+    functions/avi_codec.py), and emit one row per DECODED frame — every
     reported number comes out of the container parse, not the
     generation rule."""
     from pubsub2bq_spark.functions.avi_codec import decode_avi
 
-    for pdf in batches:
-        rows = {"doc_id": [], "frame_idx": [], "width": [], "height": [], "px_sum": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, frames = decode_avi(synth_avi_from_bytes(payload))
-            for f_idx, frame in enumerate(frames):
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(f_idx)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["px_sum"].append(int(frame.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    return _frame_sum_rows(doc_id, *decode_avi(synth_avi_from_bytes(payload)))
 
 
-VIDEO_FRAMES_SCHEMA = (
-    "doc_id bigint, frame_idx int, width int, height int, px_sum bigint"
-)
+video_frame_batches = payload_kernel(VIDEO_FRAMES_SCHEMA, _video_frame_rows)
 
 
 def synth_mjpeg_from_bytes(payload: bytes) -> bytes:
@@ -1374,9 +988,7 @@ def synth_mjpeg_from_bytes(payload: bytes) -> bytes:
     pixel sum in closed form over the block grid."""
     from pubsub2bq_spark.functions.avi_codec import encode_avi
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     n_frames = n % 5 + 1
     bx = np.arange(w) // 8
     by = np.arange(h) // 8
@@ -1402,9 +1014,7 @@ def synth_rle_avi_from_bytes(payload: bytes) -> bytes:
     states each frame's pixel sum in closed form over the four bands."""
     from pubsub2bq_spark.functions.avi_codec import encode_avi_rle
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     n_frames = n % 5 + 1
     frames = [np.full((h, w), n % 251, dtype=np.uint8)]
     for f in range(1, n_frames):
@@ -1415,34 +1025,18 @@ def synth_rle_avi_from_bytes(payload: bytes) -> bytes:
     return encode_avi_rle(frames)
 
 
-def rle_frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the INTER-FRAME video path (r13):
-    synthesize an MS-RLE8 AVI per payload, genuinely parse the RIFF
-    container and replay every '00dc' opcode stream against the
-    persistent canvas (skip opcodes keep previous-frame pixels —
-    functions/avi_codec.py), and emit one row per DECODED frame with
-    its measured dimensions and pixel sum."""
+def _rle_frame_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The INTER-FRAME video path (r13): synthesize an MS-RLE8 AVI per
+    payload, genuinely parse the RIFF container and replay every '00dc'
+    opcode stream against the persistent canvas (skip opcodes keep
+    previous-frame pixels — functions/avi_codec.py), and emit one row per
+    DECODED frame."""
     from pubsub2bq_spark.functions.avi_codec import decode_avi
 
-    for pdf in batches:
-        rows = {"doc_id": [], "frame_idx": [], "width": [], "height": [], "px_sum": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, frames = decode_avi(synth_rle_avi_from_bytes(payload))
-            for f_idx, frame in enumerate(frames):
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(f_idx)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["px_sum"].append(int(frame.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    return _frame_sum_rows(doc_id, *decode_avi(synth_rle_avi_from_bytes(payload)))
+
+
+rle_frame_batches = payload_kernel(VIDEO_FRAMES_SCHEMA, _rle_frame_rows)
 
 
 def synth_gif_from_bytes(payload: bytes) -> bytes:
@@ -1456,9 +1050,7 @@ def synth_gif_from_bytes(payload: bytes) -> bytes:
     the band algebra gives every frame's pixel sum a closed form."""
     from pubsub2bq_spark.functions.gif_codec import encode_gif
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     n_frames = n % 5 + 1
     frames = [np.full((h, w), (n + 3) % 256, dtype=np.uint8)]
     for f in range(1, n_frames):
@@ -1469,64 +1061,32 @@ def synth_gif_from_bytes(payload: bytes) -> bytes:
     return encode_gif(frames)
 
 
-def gif_frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the GIF path (r13): synthesize an
-    animated GIF89a per payload, genuinely parse the block structure
-    and LZW-decompress every image (variable code width, CLEAR/EOI,
-    table growth — functions/gif_codec.py), composite sub-rectangle
-    frames over the persistent canvas, and emit one row per decoded
-    frame with its measured pixel sum."""
+def _gif_frame_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The GIF path (r13): synthesize an animated GIF89a per payload,
+    genuinely parse the block structure and LZW-decompress every image
+    (variable code width, CLEAR/EOI, table growth — functions/gif_codec.py),
+    composite sub-rectangle frames over the persistent canvas, and emit
+    one row per decoded frame."""
     from pubsub2bq_spark.functions.gif_codec import decode_gif
 
-    for pdf in batches:
-        rows = {"doc_id": [], "frame_idx": [], "width": [], "height": [], "px_sum": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, frames = decode_gif(synth_gif_from_bytes(payload))
-            for f_idx, frame in enumerate(frames):
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(f_idx)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["px_sum"].append(int(frame.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    return _frame_sum_rows(doc_id, *decode_gif(synth_gif_from_bytes(payload)))
 
 
-def mjpeg_frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the COMPRESSED video path (r13): synthesize
-    a Motion-JPEG AVI per payload, genuinely parse the RIFF container
-    AND entropy-decode every '00dc' frame with the stdlib baseline-JPEG
-    codec (functions/avi_codec.py dispatching functions/jpeg_codec.py),
-    and emit one row per DECODED frame with its measured dimensions and
-    pixel sum."""
+gif_frame_batches = payload_kernel(VIDEO_FRAMES_SCHEMA, _gif_frame_rows)
+
+
+def _mjpeg_frame_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The COMPRESSED video path (r13): synthesize a Motion-JPEG AVI per
+    payload, genuinely parse the RIFF container AND entropy-decode every
+    '00dc' frame with the stdlib baseline-JPEG codec
+    (functions/avi_codec.py dispatching functions/jpeg_codec.py), and
+    emit one row per DECODED frame."""
     from pubsub2bq_spark.functions.avi_codec import decode_avi
 
-    for pdf in batches:
-        rows = {"doc_id": [], "frame_idx": [], "width": [], "height": [], "px_sum": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, frames = decode_avi(synth_mjpeg_from_bytes(payload))
-            for f_idx, frame in enumerate(frames):
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(f_idx)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["px_sum"].append(int(frame.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+    return _frame_sum_rows(doc_id, *decode_avi(synth_mjpeg_from_bytes(payload)))
+
+
+mjpeg_frame_batches = payload_kernel(VIDEO_FRAMES_SCHEMA, _mjpeg_frame_rows)
 
 
 def synth_mp2_from_bytes(payload: bytes) -> bytes:
@@ -1584,40 +1144,27 @@ MP2_SCHEMA = (
 )
 
 
-def mp2_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the PERCEPTUAL audio path (r14): synthesize
-    a real MPEG-1 Layer II stream per payload and genuinely decode it —
-    header walk, CRC-16 verification, Annex B bit allocation, scfsi
-    scale-factor expansion, grouped/ungrouped sample decode, exact
-    requantization, real synthesis-filterbank run
-    (functions/mp2_codec.py). The hashed features are the exact
-    bitstream-domain integers (allocation / expanded scale-factor /
-    requantization-numerator sums) plus the PCM length from the
-    synthesis run; the PCM values themselves are float and
-    window-substituted (see mp2_codec docstring), so they are pinned by
-    unit tests, not the SQL oracle."""
+def _mp2_feature_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The PERCEPTUAL audio path (r14): synthesize a real MPEG-1 Layer II
+    stream per payload and genuinely decode it — header walk, CRC-16
+    verification, Annex B bit allocation, scfsi scale-factor expansion,
+    grouped/ungrouped sample decode, exact requantization, real
+    synthesis-filterbank run (functions/mp2_codec.py). The hashed
+    features are the exact bitstream-domain integers (allocation /
+    expanded scale-factor / requantization-numerator sums) plus the PCM
+    length from the synthesis run; the PCM values themselves are float
+    and window-substituted (see mp2_codec docstring), so they are pinned
+    by unit tests, not the SQL oracle."""
     from pubsub2bq_spark.functions.mp2_codec import decode_mp2
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "n_frames": [], "sample_rate": [],
-            "bitrate_kbps": [], "alloc_sum": [], "scf_sum": [], "qsum": [],
-            "pcm_n": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            out = decode_mp2(synth_mp2_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["n_frames"].append(out["n_frames"])
-            rows["sample_rate"].append(out["sample_rate"])
-            rows["bitrate_kbps"].append(out["bitrate_kbps"])
-            rows["alloc_sum"].append(out["alloc_sum"])
-            rows["scf_sum"].append(out["scf_sum"])
-            rows["qsum"].append(out["qsum"])
-            rows["pcm_n"].append(int(out["pcm"].size))
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-        )
+    out = decode_mp2(synth_mp2_from_bytes(payload))
+    return [(
+        doc_id, len(payload), out["n_frames"], out["sample_rate"], out["bitrate_kbps"],
+        out["alloc_sum"], out["scf_sum"], out["qsum"], int(out["pcm"].size),
+    )]
+
+
+mp2_feature_batches = payload_kernel(MP2_SCHEMA, _mp2_feature_rows)
 
 
 def synth_jpeg_arith_prog_from_bytes(payload: bytes) -> bytes:
@@ -1634,45 +1181,25 @@ def synth_jpeg_arith_prog_from_bytes(payload: bytes) -> bytes:
         encode_jpeg_arith_progressive_gray,
     )
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    _n, w, h = _fixture_dims(payload)
     bx = np.arange(w) // 8
     by = np.arange(h) // 8
     px = ((17 * bx[None, :] + 3 * by[:, None] + 9) % 256).astype(np.uint8)
     return encode_jpeg_arith_progressive_gray(px, quant=8)
 
 
-def jpeg_arith_prog_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the ARITHMETIC PROGRESSIVE JPEG path
-    (r14, VERDICT r13 #7 — the last cell of the T.81 process matrix):
-    synthesize a real four-scan SOF10 stream per payload and genuinely
-    decode it through the general dispatcher (marker walk, per-scan QM
-    decode — DC first/refinement, band-limited AC first, G.2.4 AC
-    refinement — dequantize, IDCT), then pixel-sum the decoded image."""
-    from pubsub2bq_spark.functions.jpeg_codec import decode_jpeg
+def _jpeg_arith_prog_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The ARITHMETIC PROGRESSIVE JPEG path (r14 — the last cell of the
+    T.81 process matrix): synthesize a real four-scan SOF10 stream per
+    payload and genuinely decode it through the general dispatcher
+    (marker walk, per-scan QM decode — DC first/refinement, band-limited
+    AC first, G.2.4 AC refinement — dequantize, IDCT), then pixel-sum the
+    decoded image."""
+    w, h, _ch, px = decode_jpeg(synth_jpeg_arith_prog_from_bytes(payload))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)))]
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, _ch, px = decode_jpeg(synth_jpeg_arith_prog_from_bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+
+jpeg_arith_prog_batches = payload_kernel(JPEG_PROG_SCHEMA, _jpeg_arith_prog_rows)
 
 
 def synth_jpeg_arith_lossless_from_bytes(payload: bytes) -> bytes:
@@ -1687,44 +1214,21 @@ def synth_jpeg_arith_lossless_from_bytes(payload: bytes) -> bytes:
         encode_jpeg_arith_lossless,
     )
 
-    n = len(payload)
-    w = n % 64 + 16
-    h = (n // 64) % 64 + 16
+    n, w, h = _fixture_dims(payload)
     bx = np.arange(w) // 8
     by = np.arange(h) // 8
     px = ((7 * bx[None, :] + 9 * by[:, None] + n + 3) % 256).astype(np.uint8)
     return encode_jpeg_arith_lossless(px, predictor=n % 7 + 1)
 
 
-def jpeg_arith_lossless_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for the ARITHMETIC LOSSLESS JPEG path (r14 —
-    the final T.81 matrix cell): synthesize a real SOF11 stream per
-    payload and genuinely decode it through the general dispatcher
-    (QM decode under 25-context (Da, Db) conditioning, Table H.1
-    prediction, modulo-2^16 reconstruction), then pixel-sum the
-    decoded image."""
-    from pubsub2bq_spark.functions.jpeg_codec import decode_jpeg
+def _jpeg_arith_lossless_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The ARITHMETIC LOSSLESS JPEG path (r14 — the final T.81 matrix
+    cell): synthesize a real SOF11 stream per payload and genuinely
+    decode it through the general dispatcher (QM decode under 25-context
+    (Da, Db) conditioning, Table H.1 prediction, modulo-2^16
+    reconstruction), then pixel-sum the decoded image."""
+    w, h, _ch, px = decode_jpeg(synth_jpeg_arith_lossless_from_bytes(payload))
+    return [(doc_id, len(payload), w, h, int(px.sum(dtype=np.int64)))]
 
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "px_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, _ch, px = decode_jpeg(
-                synth_jpeg_arith_lossless_from_bytes(payload)
-            )
-            rows["doc_id"].append(doc_id)
-            rows["n_bytes"].append(len(payload))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            }
-        )
+
+jpeg_arith_lossless_batches = payload_kernel(JPEG_PROG_SCHEMA, _jpeg_arith_lossless_rows)

@@ -118,7 +118,7 @@ def decode_qoi(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     # One flat int list of RGBA per emitted op (runs collapsed to their
     # length) materialized in a single pass at the end — the per-op
     # numpy scalar/broadcast writes were the decoder's dominant cost
-    # (r15, VERDICT r14 #6).
+    # (r15).
     flat: list[int] = []
     reps: list[int] = []
     while i < n:

@@ -20,8 +20,6 @@ is the real 100 TB design.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,18 +27,65 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pubsub2bq_spark.functions.multimodal import (
+    ADPCM_SCHEMA,
     AUDIO_FEATURE_SCHEMA,
+    AUDIO_FRAMES_SCHEMA,
     DECODE_META_SCHEMA,
+    FLAC_SCHEMA,
+    JPEG420_SCHEMA,
+    JPEG_PROG_SCHEMA,
+    MP2_SCHEMA,
+    MULAW_SCHEMA,
+    PHASH_GRID,
+    PHASH_SCHEMA,
+    PHASH_SEED_MOD,
     PNG_RESIZE_SCHEMA,
+    QOI_SCHEMA,
     RESIZE_TARGET,
+    VIDEO_FRAMES_SCHEMA,
     WAV_RESAMPLE_SCHEMA,
+    adpcm_feature_batches,
+    alaw_feature_batches,
     decode_meta_batches,
+    flac_feature_batches,
+    gif_frame_batches,
+    jpeg420_decode_batches,
+    jpeg_arith_decode_batches,
+    jpeg_arith_lossless_batches,
+    jpeg_arith_prog_batches,
+    jpeg_decode_batches,
+    jpeg_hier_batches,
+    jpeg_lossless_batches,
+    jpeg_progressive_420_batches,
+    jpeg_progressive_batches,
+    mjpeg_frame_batches,
+    mp2_feature_batches,
+    mulaw_feature_batches,
+    phash_batches,
     png_resize_batches,
+    qoi_decode_batches,
+    rle_frame_batches,
+    tiff_decode_batches,
+    video_frame_batches,
     wav_feature_batches,
+    wav_frame_batches,
     wav_resample_batches,
 )
 from pubsub2bq_spark.registry import register
 from pubsub2bq_spark.tables import fan_out, load, materialize
+
+
+def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, payload)`` per document, the payload being the text's
+    UTF-8 bytes, fanned out for the codec kernels. The projection comes
+    BEFORE the fan-out shuffle so the exchange carries only the columns
+    a kernel reads — strictly less shuffled data at scale."""
+    return fan_out(
+        load(spark, sf_dir, "documents").select(
+            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
+        ),
+        spark,
+    )
 
 
 @register(
@@ -63,18 +108,7 @@ from pubsub2bq_spark.tables import fan_out, load, materialize
                 "binary column holds references + byte ranges.",
 )
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Project to (doc_id, payload) BEFORE the fan-out shuffle so the
-    # exchange carries only the columns the kernel needs. (r2 fanned out
-    # the full row first; an isolated min-of-3 at sf0.1 measured the
-    # variants within noise locally, but projection-first is strictly
-    # less shuffled data at scale.)
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(decode_meta_batches, DECODE_META_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(decode_meta_batches, DECODE_META_SCHEMA)
 
 
 @register(
@@ -116,13 +150,7 @@ def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "the Python decoder only reports counts per Arrow batch.",
 )
 def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    meta = d.mapInPandas(decode_meta_batches, DECODE_META_SCHEMA)
+    meta = _payloads(spark, sf_dir).mapInPandas(decode_meta_batches, DECODE_META_SCHEMA)
     return meta.select(
         "doc_id",
         F.explode(F.sequence(F.lit(1), F.col("n_frames"))).alias("frame_idx"),
@@ -169,13 +197,7 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "partitions shrink rather than grow.",
 )
 def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(png_resize_batches, PNG_RESIZE_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(png_resize_batches, PNG_RESIZE_SCHEMA)
 
 
 @register(
@@ -228,15 +250,7 @@ def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "per 8×8 block) and output is O(1) per document.",
 )
 def jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import jpeg_decode_batches
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_decode_batches, PNG_RESIZE_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_decode_batches, PNG_RESIZE_SCHEMA)
 
 
 @register(
@@ -284,18 +298,7 @@ def jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "per-row work, O(1) output per document.",
 )
 def jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG_PROG_SCHEMA,
-        jpeg_progressive_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_progressive_batches, JPEG_PROG_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_progressive_batches, JPEG_PROG_SCHEMA)
 
 
 @register(
@@ -347,18 +350,7 @@ def jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "output per document.",
 )
 def jpeg_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG_PROG_SCHEMA,
-        jpeg_hier_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_hier_batches, JPEG_PROG_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_hier_batches, JPEG_PROG_SCHEMA)
 
 
 @register(
@@ -428,18 +420,7 @@ def jpeg_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "twin) and output is O(1) per document.",
 )
 def jpeg_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG420_SCHEMA,
-        jpeg420_decode_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg420_decode_batches, JPEG420_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg420_decode_batches, JPEG420_SCHEMA)
 
 
 @register(
@@ -485,18 +466,7 @@ def jpeg_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "across documents.",
 )
 def qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        QOI_SCHEMA,
-        qoi_decode_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(qoi_decode_batches, QOI_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(qoi_decode_batches, QOI_SCHEMA)
 
 
 @register(
@@ -543,18 +513,7 @@ def qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "multi-strip writer exists to exercise.",
 )
 def tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG_PROG_SCHEMA,
-        tiff_decode_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(tiff_decode_batches, JPEG_PROG_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(tiff_decode_batches, JPEG_PROG_SCHEMA)
 
 
 @register(
@@ -604,18 +563,7 @@ def tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "100 TB.",
 )
 def jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG_PROG_SCHEMA,
-        jpeg_lossless_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_lossless_batches, JPEG_PROG_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_lossless_batches, JPEG_PROG_SCHEMA)
 
 
 @register(
@@ -688,18 +636,7 @@ def jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "only O(1) features leave it.",
 )
 def jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG420_SCHEMA,
-        jpeg_arith_decode_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_arith_decode_batches, JPEG420_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_arith_decode_batches, JPEG420_SCHEMA)
 
 
 @register(
@@ -748,18 +685,7 @@ def jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "document.",
 )
 def jpeg_arith_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG_PROG_SCHEMA,
-        jpeg_arith_prog_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_arith_prog_batches, JPEG_PROG_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_arith_prog_batches, JPEG_PROG_SCHEMA)
 
 
 @register(
@@ -803,18 +729,7 @@ def jpeg_arith_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pass over the sample grid, O(1) output per document.",
 )
 def jpeg_arith_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG_PROG_SCHEMA,
-        jpeg_arith_lossless_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_arith_lossless_batches, JPEG_PROG_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_arith_lossless_batches, JPEG_PROG_SCHEMA)
 
 
 @register(
@@ -881,18 +796,7 @@ def jpeg_arith_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "passes per image, O(1) output per document.",
 )
 def jpeg_progressive_color(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        JPEG420_SCHEMA,
-        jpeg_progressive_420_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(jpeg_progressive_420_batches, JPEG420_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(jpeg_progressive_420_batches, JPEG420_SCHEMA)
 
 
 @register(
@@ -930,13 +834,7 @@ def jpeg_progressive_color(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "keyed aggregate consumes the features.",
 )
 def audio_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(wav_feature_batches, AUDIO_FEATURE_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(wav_feature_batches, AUDIO_FEATURE_SCHEMA)
 
 
 @register(
@@ -985,18 +883,7 @@ def audio_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "payload and the output is O(1) per document.",
 )
 def audio_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        MULAW_SCHEMA,
-        mulaw_feature_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(mulaw_feature_batches, MULAW_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(mulaw_feature_batches, MULAW_SCHEMA)
 
 
 @register(
@@ -1051,18 +938,7 @@ def audio_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "payload and the output is O(1) per document.",
 )
 def audio_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        MULAW_SCHEMA,
-        alaw_feature_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(alaw_feature_batches, MULAW_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(alaw_feature_batches, MULAW_SCHEMA)
 
 
 @register(
@@ -1119,18 +995,7 @@ def audio_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exchange.",
 )
 def audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        ADPCM_SCHEMA,
-        adpcm_feature_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(adpcm_feature_batches, ADPCM_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(adpcm_feature_batches, ADPCM_SCHEMA)
 
 
 @register(
@@ -1178,18 +1043,7 @@ def audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "scan stage.",
 )
 def audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        FLAC_SCHEMA,
-        flac_feature_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(flac_feature_batches, FLAC_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(flac_feature_batches, FLAC_SCHEMA)
 
 
 @register(
@@ -1289,18 +1143,7 @@ def audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "triple — linear in payload size, partition-parallel.",
 )
 def audio_mp2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        MP2_SCHEMA,
-        mp2_feature_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(mp2_feature_batches, MP2_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(mp2_feature_batches, MP2_SCHEMA)
 
 
 @register(
@@ -1341,13 +1184,7 @@ def audio_mp2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "resample belongs BEFORE any shuffle that moves audio.",
 )
 def audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(wav_resample_batches, WAV_RESAMPLE_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(wav_resample_batches, WAV_RESAMPLE_SCHEMA)
 
 
 _PHASH_RADIUS = 7  # 8 bands x 8 bits; dist <= 7 => one band equal (pigeonhole)
@@ -1370,15 +1207,7 @@ def _phash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phash_table_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import PHASH_SCHEMA, phash_batches
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(phash_batches, PHASH_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(phash_batches, PHASH_SCHEMA)
 
 
 def _phash_oracle_ctes() -> str:
@@ -1387,8 +1216,6 @@ def _phash_oracle_ctes() -> str:
     brightness shift seed = doc_id%97, 8x8 nearest-neighbor sample at
     exact floor indices, strict-mean threshold (64*v > sum), bits packed
     row-major (k = j*8+i) into lo/hi BIGINT halves."""
-    from pubsub2bq_spark.functions.multimodal import PHASH_GRID, PHASH_SEED_MOD
-
     g = PHASH_GRID
     return f"""
         m AS (
@@ -1599,18 +1426,7 @@ def _image_phash_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bytes themselves never leave the scan stage.",
 )
 def audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        AUDIO_FRAMES_SCHEMA,
-        wav_frame_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(wav_frame_batches, AUDIO_FRAMES_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(wav_frame_batches, AUDIO_FRAMES_SCHEMA)
 
 
 @register(
@@ -1717,18 +1533,7 @@ def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "never the full decoded stream.",
 )
 def video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        VIDEO_FRAMES_SCHEMA,
-        video_frame_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(video_frame_batches, VIDEO_FRAMES_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(video_frame_batches, VIDEO_FRAMES_SCHEMA)
 
 
 @register(
@@ -1785,18 +1590,7 @@ def video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "granularity with no inter-frame state.",
 )
 def video_frames_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        VIDEO_FRAMES_SCHEMA,
-        mjpeg_frame_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(mjpeg_frame_batches, VIDEO_FRAMES_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(mjpeg_frame_batches, VIDEO_FRAMES_SCHEMA)
 
 
 @register(
@@ -1847,18 +1641,7 @@ def video_frames_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "scan stage.",
 )
 def gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        VIDEO_FRAMES_SCHEMA,
-        gif_frame_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(gif_frame_batches, VIDEO_FRAMES_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(gif_frame_batches, VIDEO_FRAMES_SCHEMA)
 
 
 @register(
@@ -1914,15 +1697,4 @@ def gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exceed a task.",
 )
 def video_frames_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pubsub2bq_spark.functions.multimodal import (
-        VIDEO_FRAMES_SCHEMA,
-        rle_frame_batches,
-    )
-
-    d = fan_out(
-        load(spark, sf_dir, "documents").select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-        ),
-        spark,
-    )
-    return d.mapInPandas(rle_frame_batches, VIDEO_FRAMES_SCHEMA)
+    return _payloads(spark, sf_dir).mapInPandas(rle_frame_batches, VIDEO_FRAMES_SCHEMA)

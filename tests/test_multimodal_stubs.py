@@ -10,6 +10,8 @@ encoder never emits), and the gate still fires loudly for the rest.
 
 from __future__ import annotations
 
+import ast
+import inspect
 import struct
 import zlib
 
@@ -169,25 +171,6 @@ def test_wav_roundtrip_and_real_rms():
     assert feats["rms"] == math.sqrt(sq / ns) / 32768.0
 
 
-def test_fake_resize_preserves_aspect_and_bounds():
-    meta = mm.fake_resize_meta(b"x" * 1000)
-    assert max(meta["out_w"], meta["out_h"]) <= mm.RESIZE_TARGET
-    assert min(meta["out_w"], meta["out_h"]) >= 1
-    # the longer input side maps to exactly the target
-    if meta["width"] >= meta["height"]:
-        assert meta["out_w"] == mm.RESIZE_TARGET
-    else:
-        assert meta["out_h"] == mm.RESIZE_TARGET
-
-
-def test_fake_audio_features_deterministic_and_bounded():
-    a = mm.fake_audio_features(b"payload-bytes")
-    b = mm.fake_audio_features(b"payload-bytes")
-    assert a == b
-    assert 0.0 <= a["rms"] < 1.0
-    assert a["n_windows"] == len(b"payload-bytes") // 256 + 1
-
-
 def test_kernels_consume_and_emit_arrow_batch_shapes():
     pdf = pd.DataFrame(
         {"doc_id": [1, 2], "payload": [b"abc", b"x" * 300]}
@@ -200,6 +183,52 @@ def test_kernels_consume_and_emit_arrow_batch_shapes():
     (audio,) = list(mm.wav_feature_batches(iter([pdf])))
     assert list(audio.columns) == ["doc_id", "n_bytes", "n_windows", "rms"]
     assert audio["n_windows"].tolist() == [1, 2]
+
+
+def _mapped_kernels() -> list[tuple[str, str]]:
+    """Every (kernel, schema) name pair that operators/multimodal.py
+    passes to ``mapInPandas``."""
+    from pubsub2bq_spark.operators import multimodal as ops
+
+    calls = [
+        c for c in ast.walk(ast.parse(inspect.getsource(ops)))
+        if isinstance(c, ast.Call)
+        and isinstance(c.func, ast.Attribute)
+        and c.func.attr == "mapInPandas"
+    ]
+    return sorted({(c.args[0].id, c.args[1].id) for c in calls})
+
+
+# The Spark DDL -> pandas dtype mapping the kernels' output frames must follow.
+_DDL_DTYPES = {"bigint": "int64", "int": "int32", "double": "float64", "string": "object"}
+
+
+@pytest.mark.parametrize("kernel_name,schema_name", _mapped_kernels())
+def test_payload_kernels_match_schema(kernel_name, schema_name):
+    """Each kernel's output frame has exactly its DDL schema's columns and
+    dtypes, on a full batch and on an empty one, and the kernel carries
+    its public name (the name Spark prints in plans)."""
+    kernel = getattr(mm, kernel_name)
+    want = [
+        (name, _DDL_DTYPES[ddl])
+        for name, ddl in (f.split() for f in getattr(mm, schema_name).split(","))
+    ]
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.arange(5, dtype=np.int64),
+            "payload": [b"", b"a", b"x" * 70, b"y" * 300, b"z" * 999],
+        }
+    )
+    for batch in (pdf, pdf.iloc[:0]):
+        (out,) = list(kernel(iter([batch])))
+        assert [(c, str(t)) for c, t in out.dtypes.items()] == want
+        assert len(out) >= len(batch)
+    assert kernel.__name__ == kernel_name
+
+
+def test_payload_kernel_rejects_unmapped_ddl_type():
+    with pytest.raises(ValueError, match="float"):
+        mm.payload_kernel("doc_id bigint, x float", lambda doc_id, payload: [])
 
 
 def test_wav_resample_kernel_real_roundtrip():

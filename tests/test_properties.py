@@ -174,36 +174,6 @@ class TestRound8Kernels:
     """Pure-Python / DuckDB-side properties of the round-8 kernels —
     no Spark round-trip, so the strategies can run more examples."""
 
-    @given(st.binary(min_size=0, max_size=2048))
-    @settings(max_examples=60, deadline=None)
-    def test_fake_resize_bounds_and_aspect(self, payload):
-        from pubsub2bq_spark.functions.multimodal import (
-            RESIZE_TARGET,
-            fake_resize_meta,
-        )
-
-        m = fake_resize_meta(payload)
-        assert 1 <= m["out_w"] <= RESIZE_TARGET
-        assert 1 <= m["out_h"] <= RESIZE_TARGET
-        # the longer side always maps to exactly the target
-        assert max(m["out_w"], m["out_h"]) == RESIZE_TARGET
-        # aspect preserved up to integer floor: out_w/out_h within one
-        # rounding step of width/height
-        lhs = m["out_w"] * m["height"]
-        rhs = m["out_h"] * m["width"]
-        slack = max(m["width"], m["height"])
-        assert abs(lhs - rhs) <= slack
-
-    @given(st.binary(min_size=0, max_size=2048))
-    @settings(max_examples=60, deadline=None)
-    def test_fake_audio_features_range(self, payload):
-        from pubsub2bq_spark.functions.multimodal import fake_audio_features
-
-        f = fake_audio_features(payload)
-        assert 0.0 <= f["rms"] < 1.0
-        assert f["n_windows"] == len(payload) // 256 + 1
-        assert f == fake_audio_features(payload)
-
     @given(
         st.lists(
             st.integers(min_value=-10**15, max_value=10**15),
