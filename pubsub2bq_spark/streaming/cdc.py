@@ -10,7 +10,7 @@ Stage map (reference → here):
   publish w/ topic schema + key     → to_json payload + ordering_key +
                                       attributes map w/ revision id (S3)
   BigQuery subscription             → foreachBatch: parse w/ topic schema,
-                                      project_to_sink_schema, append parquet (S4)
+                                      sink_columns projection, append parquet (S4)
   dead-letter topic                 → corrupt rows + exhausted retries →
                                       DLQ parquet table (S5)
   inspection pull subscription      → raw_tap(): the pre-parse message
@@ -31,18 +31,21 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pubsub2bq_spark.plans.pipeline_spec import CdcPipelineSpec
 from pubsub2bq_spark.streaming.reconcile import (
     SchemaMismatchError,
+    check_sink_schema,
     include_list_filter,
-    project_to_sink_schema,
+    parse_column,
     rewrite_deletes,
-    split_corrupt,
+    sink_columns,
     unwrap_envelope,
 )
+
+_MESSAGE_COLS = ("data", "ordering_key", "attributes", "ts_ms")
 
 
 class CdcPipeline:
@@ -50,6 +53,7 @@ class CdcPipeline:
         self.spark = spark
         self.spec = spec
         self._halt_error: SchemaMismatchError | None = None
+        self._columns: dict[tuple, tuple[Column, Column, list[Column]]] = {}
 
     # ---- source + publisher side -----------------------------------------
     def envelope_stream(self) -> DataFrame:
@@ -94,15 +98,13 @@ class CdcPipeline:
     # Per-message delivery accounting (reference: retry_policy
     # minimum_backoff 60s + dead_letter_policy max_delivery_attempts 5,
     # /root/reference/terraform/main.tf:402-409). A failed sink write
-    # NACKs the batch: each message's failure is appended to a persistent
-    # nack log next to the checkpoint, and the raised error leaves the
-    # offsets uncommitted so the source redelivers — exactly Pub/Sub's
-    # redelivery-on-nack. On redelivery, messages whose logged attempts
-    # reached the cap are routed to the DLQ (with their real attempt
-    # count) instead of the sink, so a poison batch drains. The log holds
-    # only in-flight failed messages (cleared when the frontier batch
-    # commits) — at scale this is the broker's tiny per-message delivery
-    # state, never data-sized, and it broadcasts into the batch join.
+    # NACKs the batch: each message's failure is appended to a nack log
+    # next to the checkpoint, and the raised error leaves the offsets
+    # uncommitted so the source redelivers. On redelivery, messages whose
+    # logged attempts reached the cap go to the DLQ (with their real
+    # attempt count) instead of the sink, so a poison batch drains. The
+    # log holds only in-flight failed messages and broadcasts into the
+    # batch join.
 
     @property
     def _nack_dir(self) -> str:
@@ -121,13 +123,9 @@ class CdcPipeline:
         )
 
     def _record_nacks(self, messages: DataFrame) -> None:
-        (
-            messages.select(
-                "ordering_key", "ts_ms", F.lit(time.time()).alias("failed_at")
-            )
-            .write.mode("append")
-            .parquet(self._nack_dir)
-        )
+        failed_at = F.lit(time.time()).alias("failed_at")
+        nacks = messages.select("ordering_key", "ts_ms", failed_at)
+        nacks.write.mode("append").parquet(self._nack_dir)
 
     def _await_backoff(self, nacks: DataFrame | None) -> None:
         """Honor the minimum redelivery backoff: wait out the remainder of
@@ -143,17 +141,14 @@ class CdcPipeline:
 
     # ---- exactly-once delivery machinery ----------------------------------
     #
-    # foreachBatch + a plain parquet append is only at-least-once: a
-    # crash BETWEEN the sink write and the checkpoint commit replays the
-    # epoch and duplicates its rows. Delivery is therefore idempotent
-    # per epoch (the standard foreachBatch exactly-once idiom):
-    #   1. every epoch's files get DETERMINISTIC names (batch{N}-i),
-    #      and a replayed epoch scrubs its stragglers before rewriting —
-    #      a half-delivered epoch can never double;
-    #   2. a delivery-commit marker (checkpoint-adjacent) is written
-    #      after the WHOLE delivery (sink + DLQ + nack cleanup); a
-    #      replay that finds the marker skips straight to the offset
-    #      commit — covering a crash between marker and checkpoint.
+    # foreachBatch + a plain parquet append is only at-least-once: a crash
+    # BETWEEN the sink write and the checkpoint commit replays the epoch.
+    # Delivery is therefore idempotent per epoch (the standard idiom):
+    #   1. every epoch's files get DETERMINISTIC names (batch{N}-i), and a
+    #      replayed epoch scrubs its stragglers before rewriting;
+    #   2. a delivery-commit marker is written after the WHOLE delivery
+    #      (sink + DLQ + nack cleanup); a replay that finds it skips
+    #      straight to the offset commit.
     # Layout stays FLAT files in sink_dir, so the TTL pass (file mtime =
     # fragment delivery time) and every existing reader are unchanged.
 
@@ -170,33 +165,27 @@ class CdcPipeline:
         """Idempotent append of one epoch's rows: scrub this prefix's
         stragglers (a killed earlier attempt), stage with Spark, then
         publish parts under deterministic names. The dot-prefixed stage
-        dir is invisible to parquet discovery and the TTL listing."""
-        if os.path.isdir(dest_dir):
+        dir is invisible to parquet discovery and the TTL listing. Parts
+        are published in order, so a killed attempt left stragglers only
+        if part 0 exists: the directory is listed only then."""
+        if os.path.exists(os.path.join(dest_dir, f"{prefix}0.parquet")):
             for name in os.listdir(dest_dir):
                 if name.startswith(prefix):
-                    try:
-                        os.remove(os.path.join(dest_dir, name))
-                    except OSError:
-                        pass
+                    os.remove(os.path.join(dest_dir, name))
         stage = os.path.join(dest_dir, f".stage-{prefix}")
         df.write.mode("overwrite").parquet(stage)
-        i = 0
-        for name in sorted(os.listdir(stage)):
-            if name.endswith(".parquet"):
-                os.replace(
-                    os.path.join(stage, name),
-                    os.path.join(dest_dir, f"{prefix}{i}.parquet"),
-                )
-                i += 1
+        parts = sorted(n for n in os.listdir(stage) if n.endswith(".parquet"))
+        for i, name in enumerate(parts):
+            published = os.path.join(dest_dir, f"{prefix}{i}.parquet")
+            os.replace(os.path.join(stage, name), published)
         shutil.rmtree(stage, ignore_errors=True)
 
     def _write_sink(self, projected: DataFrame) -> None:
         """The one fallible delivery hop (tests inject transient faults
         here). Idempotent per epoch: deterministic per-epoch file names,
         and a replay scrubs first."""
-        self._atomic_append(
-            projected, self.spec.sink_dir, f"batch{self._current_epoch}-"
-        )
+        prefix = f"batch{self._current_epoch}-"
+        self._atomic_append(projected, self.spec.sink_dir, prefix)
 
     def _deliver(self, messages: DataFrame, epoch_id: int) -> None:
         """One micro-batch delivery. Order of operations matters:
@@ -209,37 +198,51 @@ class CdcPipeline:
             # commit: this epoch's rows are already fully delivered —
             # replaying them would duplicate. Let the engine commit.
             return
-        # Epoch state is scoped strictly to this delivery: ANY exception
-        # escaping below (sink write, DLQ write, marker write) must not
-        # leave a stale epoch on the pipeline object.
+        # Epoch state is scoped strictly to this delivery: no exception
+        # escaping below may leave a stale epoch on the pipeline object.
         self._current_epoch = epoch_id
         try:
             self._deliver_epoch(messages, epoch_id)
+        except SchemaMismatchError as err:
+            self._halt_error = err
+            raise
         finally:
             self._current_epoch = None
 
-    def _deliver_epoch(self, messages: DataFrame, epoch_id: int) -> None:
-        spec = self.spec
-        valid, corrupt = split_corrupt(messages, "data", spec.topic_schema)
-
-        nacks = self._nack_counts()
-        exhausted: DataFrame | None = None
-        deliverable = valid
-        if nacks is not None:
-            flagged = valid.join(F.broadcast(nacks), ["ordering_key", "ts_ms"], "left")
-            exhausted = flagged.filter(
-                F.col("prior_attempts") >= spec.retry.max_attempts
+    def _batch_columns(self) -> tuple[Column, Column, list[Column]]:
+        """(parsed struct, corrupt flag, sink projection), built once per
+        (topic, sink) schema pair. The halt check runs on every call."""
+        key = (self.spec.topic_schema, self.spec.sink_schema)
+        check_sink_schema(*key)
+        if key not in self._columns:
+            parsed = F.col("_parsed")
+            self._columns[key] = (
+                parse_column("data", key[0]).alias("_parsed"),
+                parsed.getField("_corrupt").isNotNull(),
+                sink_columns(*key, field=parsed.getField),
             )
-            deliverable = flagged.filter(
-                F.col("prior_attempts").isNull()
-                | (F.col("prior_attempts") < spec.retry.max_attempts)
-            ).drop("prior_attempts", "last_failed")
+        return self._columns[key]
 
-        projected = project_to_sink_schema(
-            deliverable.drop("data", "ordering_key", "attributes", "ts_ms"),
-            spec.topic_schema,
-            spec.sink_schema,
-        )
+    def _deliver_epoch(self, messages: DataFrame, epoch_id: int) -> None:
+        """A clean batch runs one Spark job, the sink write: the count of
+        rows bound for each DLQ reason arrives with it through one
+        Observation, and a DLQ write runs only when its count is nonzero."""
+        parse, corrupt, sink = self._batch_columns()
+        parsed = messages.select(*_MESSAGE_COLS, parse)
+        nacks = self._nack_counts()
+        keep, exhausted = ~corrupt, F.lit(False)
+        if nacks is not None:
+            parsed = parsed.join(F.broadcast(nacks), ["ordering_key", "ts_ms"], "left")
+            cap = self.spec.retry.max_attempts
+            over_cap = F.coalesce(F.col("prior_attempts") >= cap, F.lit(False))
+            keep, exhausted = ~corrupt & ~over_cap, ~corrupt & over_cap
+        dlq = [  # (reason, rows, delivery attempts), written in this order
+            ("delivery_failed", exhausted, F.col("prior_attempts").cast("int")),
+            ("schema_validation_failed", corrupt, F.lit(1)),
+        ]
+        obs = Observation()
+        counts = [F.count_if(rows).alias(reason) for reason, rows, _ in dlq]
+        projected = parsed.observe(obs, *counts).filter(keep).select(*sink)
 
         self._await_backoff(nacks)
         try:
@@ -248,59 +251,45 @@ class CdcPipeline:
             # Transient delivery failure → NACK: log one failed attempt per
             # message and fail the batch so offsets stay uncommitted and
             # the source redelivers after the backoff. (A schema mismatch
-            # is permanent, but project_to_sink_schema raises it above.)
-            self._record_nacks(deliverable)
+            # is permanent, but _batch_columns raises it above.)
+            self._record_nacks(parsed.filter(keep))
             raise
 
-        if exhausted is not None:
-            ex = exhausted.select(
-                "data",
-                "ordering_key",
-                "attributes",
-                "ts_ms",
-                F.col("prior_attempts").cast("int").alias("delivery_attempts"),
-            )
-            if ex.limit(1).count() > 0:
-                self._to_dlq(ex, reason="delivery_failed")
-
-        if corrupt.limit(1).count() > 0:
-            self._to_dlq(
-                corrupt.select("data", "ordering_key", "attributes", "ts_ms"),
-                reason="schema_validation_failed",
-                attempts=1,
-            )
+        observed = obs.get  # filled by the write that just returned
+        for reason, rows, attempts in dlq:
+            if observed[reason]:
+                # Same exactly-once discipline as the sink: one deterministic
+                # prefix per (epoch, reason), replay scrubs before rewriting.
+                out = parsed.filter(rows).select(
+                    *_MESSAGE_COLS,
+                    F.lit(reason).alias("dlq_reason"),
+                    attempts.alias("delivery_attempts"),
+                )
+                prefix = f"batch{epoch_id}-{reason}-"
+                self._atomic_append(out, self.spec.dlq_dir, prefix)
 
         # Frontier batch committed: its delivery state is settled.
         shutil.rmtree(self._nack_dir, ignore_errors=True)
 
         # Delivery complete (sink + DLQ + nack state): write the epoch's
         # commit marker so a crash before the OFFSET commit replays as a
-        # no-op instead of a duplicate delivery.
+        # no-op instead of a duplicate delivery. Spark commits epoch N-1's
+        # offsets before it starts N, so no replay reads earlier markers.
         os.makedirs(self._commit_dir, exist_ok=True)
         with open(self._delivery_marker(epoch_id), "w"):
             pass
+        for name in os.listdir(self._commit_dir):
+            if int(name.removeprefix("epoch-")) < epoch_id:
+                os.remove(os.path.join(self._commit_dir, name))
 
         # Post-commit retention pass (runs only when a TTL is configured).
         self.enforce_table_retention(now_s=time.time())
-
-    def _to_dlq(self, df: DataFrame, reason: str, attempts: int | None = None) -> None:
-        out = df.withColumn("dlq_reason", F.lit(reason))
-        if "delivery_attempts" not in df.columns:
-            out = out.withColumn("delivery_attempts", F.lit(attempts))
-        rows = out.select(
-            "data", "ordering_key", "attributes", "ts_ms",
-            "dlq_reason", "delivery_attempts",
-        )
-        # Same exactly-once discipline as the sink: one deterministic
-        # prefix per (epoch, reason), replay scrubs before rewriting.
-        self._atomic_append(
-            rows, self.spec.dlq_dir, f"batch{self._current_epoch}-{reason}-"
-        )
 
     # ---- run ---------------------------------------------------------------
     def _start(self, **trigger):
         """Start the delivery query: every micro-batch goes through
         _deliver, offsets checkpoint under spec.checkpoint_dir."""
+        self._halt_error = None
         return (
             self.message_stream()
             .writeStream.foreachBatch(self._deliver)
@@ -317,18 +306,16 @@ class CdcPipeline:
             q.awaitTermination()
         except Exception as ex:  # surface the halt as the reference does:
             # subscription state = "table schema mismatch", zero rows delivered.
-            if "SchemaMismatchError" in str(ex) or "table schema mismatch" in str(ex):
-                raise SchemaMismatchError(str(ex)) from ex
-            raise
+            if self._halt_error is None:
+                raise
+            raise self._halt_error from ex
 
     def run_processing_time(self, interval: str = "1 second"):
         """Start the pipeline under a processing-time trigger — the
         production mode (the AvailableNow twin drains-and-stops for
         deterministic tests). Returns the live StreamingQuery; the
         caller owns stop()/awaitTermination. Exactly-once under
-        kill-mid-batch comes from the epoch-idempotent delivery
-        (deterministic per-epoch file names + delivery-commit marker),
-        exercised by tests/test_cdc_golden.py's soak test."""
+        kill-mid-batch comes from the epoch-idempotent delivery above."""
         return self._start(processingTime=interval)
 
     # ---- taps ---------------------------------------------------------------
@@ -393,23 +380,10 @@ class CdcPipeline:
         snapshots; nothing data-sized moves either way. No-op unless
         ``delivery.table_ttl_seconds`` is set. Returns pruned paths."""
         ttl = self.spec.delivery.table_ttl_seconds
-        pruned: list[str] = []
         if ttl is None:
-            return pruned
-        cutoff = now_s - ttl
-        for root in (self.spec.sink_dir, self.spec.dlq_dir):
-            if not os.path.isdir(root):
-                continue
-            for name in sorted(os.listdir(root)):
-                path = os.path.join(root, name)
-                if (
-                    os.path.isfile(path)
-                    and not name.startswith(("_", "."))
-                    and os.path.getmtime(path) < cutoff
-                ):
-                    os.remove(path)
-                    pruned.append(path)
-        return pruned
+            return []
+        roots = (self.spec.sink_dir, self.spec.dlq_dir)
+        return [p for r in roots for p in _prune_aged(r, now_s - ttl, ("_", "."))]
 
     def prune_spool(self, now_s: float) -> list[str]:
         """Enforce source-side retention (T3): drop spool segments whose
@@ -420,12 +394,19 @@ class CdcPipeline:
         far as the newest surviving segment — the same bound Pub/Sub
         retention puts on its REPLAY button."""
         cutoff = now_s - self.spec.delivery.sink_retention_seconds
-        pruned: list[str] = []
-        if not os.path.isdir(self.spec.spool_dir):
-            return pruned
-        for name in sorted(os.listdir(self.spec.spool_dir)):
-            path = os.path.join(self.spec.spool_dir, name)
-            if os.path.isfile(path) and os.path.getmtime(path) < cutoff:
-                os.remove(path)
-                pruned.append(path)
-        return pruned
+        return _prune_aged(self.spec.spool_dir, cutoff)
+
+
+def _prune_aged(root: str, cutoff: float, skip: tuple[str, ...] = ()) -> list[str]:
+    """Delete the files directly under ``root`` last modified before
+    ``cutoff``, except names starting with ``skip``; return their paths."""
+    if not os.path.isdir(root):
+        return []
+    pruned = []
+    for name in sorted(os.listdir(root)):
+        path = os.path.join(root, name)
+        aged = os.path.isfile(path) and os.path.getmtime(path) < cutoff
+        if aged and not name.startswith(skip):
+            os.remove(path)
+            pruned.append(path)
+    return pruned

@@ -71,6 +71,32 @@ def include_list_filter(
     )
 
 
+def check_sink_schema(topic_schema: T.StructType, sink_schema: T.StructType) -> None:
+    """The hard halt: raise SchemaMismatchError when a topic-schema column
+    is missing at the sink (the `zipcode` case). Reads schemas only."""
+    sink_names = {f.name for f in sink_schema.fields}
+    missing_at_sink = [f.name for f in topic_schema.fields if f.name not in sink_names]
+    if missing_at_sink:
+        raise SchemaMismatchError(
+            f"table schema mismatch: topic-schema column(s) {missing_at_sink} "
+            "missing at sink; delivery halted, zero rows written"
+        )
+
+
+def sink_columns(
+    topic_schema: T.StructType, sink_schema: T.StructType, field
+) -> list[Column]:
+    """The projection of ``project_to_sink_schema`` as sink-ordered
+    columns; ``field(name)`` reads one topic column of the payload."""
+    topic_names = {f.name for f in topic_schema.fields}
+    return [
+        (field(f.name) if f.name in topic_names else F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in sink_schema.fields
+    ]
+
+
 def project_to_sink_schema(
     df: DataFrame,
     topic_schema: T.StructType,
@@ -82,29 +108,30 @@ def project_to_sink_schema(
     * Payload fields NOT in the topic schema → silently dropped, even
       with drop_unknown_fields=false (topic schema wins — the `phone` case).
     * Sink-only columns (not in topic schema) → NULL-filled (the `age` case).
+    * Topic columns absent from this payload revision → NULL-filled.
     * Topic-schema columns missing at the sink → hard halt (the `zipcode`
       case): raise SchemaMismatchError before any write.
     """
-    sink_fields = {f.name: f for f in sink_schema.fields}
-    topic_names = [f.name for f in topic_schema.fields]
+    check_sink_schema(topic_schema, sink_schema)
+    present = set(df.columns)
 
-    missing_at_sink = [n for n in topic_names if n not in sink_fields]
-    if missing_at_sink:
-        raise SchemaMismatchError(
-            f"table schema mismatch: topic-schema column(s) {missing_at_sink} "
-            "missing at sink; delivery halted, zero rows written"
-        )
+    def field(name: str) -> Column:
+        return F.col(name) if name in present else F.lit(None)
 
-    payload_cols = set(df.columns)
-    out: list[Column] = []
-    for f in sink_schema.fields:
-        if f.name in topic_names and f.name in payload_cols:
-            out.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            # Sink-only column, or topic column absent from this payload
-            # revision → NULL-fill.
-            out.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*out)
+    return df.select(*sink_columns(topic_schema, sink_schema, field))
+
+
+def parse_column(
+    data_col: str, schema: T.StructType, corrupt_col: str = "_corrupt"
+) -> Column:
+    """Permissive JSON parse of ``data_col``: a struct whose
+    ``corrupt_col`` field holds the raw payload when it does not parse."""
+    parse_schema = T.StructType(schema.fields + [T.StructField(corrupt_col, T.StringType())])
+    return F.from_json(
+        F.col(data_col),
+        parse_schema,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
+    )
 
 
 def split_corrupt(
@@ -117,15 +144,7 @@ def split_corrupt(
     split (valid, corrupt). Corrupt rows keep the raw payload for the
     dead-letter path (reference: dead_letter_policy after 5 attempts,
     /root/reference/terraform/main.tf:406-409)."""
-    parse_schema = T.StructType(schema.fields + [T.StructField(corrupt_col, T.StringType())])
-    parsed = df.withColumn(
-        "_parsed",
-        F.from_json(
-            F.col(data_col),
-            parse_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
-        ),
-    )
+    parsed = df.withColumn("_parsed", parse_column(data_col, schema, corrupt_col))
     flat = parsed.select("*", "_parsed.*").drop("_parsed")
     valid = flat.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
     corrupt = flat.filter(F.col(corrupt_col).isNotNull())

@@ -1,4 +1,4 @@
-"""Sustained streaming throughput for the CDC pipeline (VERDICT r9 #2).
+"""Sustained streaming throughput for the CDC pipeline.
 
 The reference is a continuous-delivery pipeline (`dataFreshness: 0s`,
 /root/reference/terraform/datastream.sh:99; per-event offset flush,
@@ -88,7 +88,7 @@ def measure_stream_throughput(
     # spark.sql.streaming.numRecentProgressUpdates (default 100): a run
     # with more micro-batches — or a long idle tail emitting no-data
     # progress events — evicts early non-empty batches, undercounting
-    # delivered rows and busy seconds (ADVICE r10). Accumulate
+    # delivered rows and busy seconds. Accumulate
     # incrementally keyed by batchId inside the poll loop instead of
     # trusting any single capped snapshot.
     by_batch: dict[int, dict] = {}

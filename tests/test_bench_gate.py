@@ -4,6 +4,8 @@ wall-clock regression gate."""
 
 from __future__ import annotations
 
+import os
+
 import bench
 from tests.conftest import SF_SMOKE
 
@@ -183,3 +185,39 @@ def test_artifact_build_counts_reach_counters(spark, monkeypatch):
     assert stable == {"build_minhash_lsh_pairs": [jobs, stages]}
     assert unstable == []
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_cdc_clean_batch_runs_one_job(spark, tmp_path):
+    """A clean CDC micro-batch runs one Spark job, the sink write: its
+    corrupt count arrives with the write through observe(). A batch with
+    one truncated payload adds only the DLQ write. Counting corrupt rows
+    with a separate limit(1).count() probe took 3 jobs per clean batch."""
+    from pyspark.sql import functions as F
+
+    from pubsub2bq_spark.sources import cdc_fixtures as fx
+    from pubsub2bq_spark.streaming.cdc import CdcPipeline
+    from tests.test_cdc_golden import make_spec
+
+    spec = make_spec(str(tmp_path), fx.SINK_SCHEMA_V1)
+    fx.write_segment(spec.spool_dir, "000_snapshot", fx.snapshot_events())
+    p = CdcPipeline(spark, spec)
+    msgs = p.raw_tap_batch()
+    _seconds, (jobs, _stages) = bench._counted(
+        spark, "cdc_clean", lambda: p._deliver(msgs, epoch_id=1)
+    )
+    assert jobs == 1
+    assert not os.path.exists(spec.dlq_dir)
+
+    truncated = msgs.withColumn(
+        "data",
+        F.when(F.col("ordering_key") == '{"id":990}', F.lit('{"id":99')).otherwise(
+            F.col("data")
+        ),
+    )
+    _seconds, (jobs, _stages) = bench._counted(
+        spark, "cdc_corrupt", lambda: p._deliver(truncated, epoch_id=2)
+    )
+    assert jobs == 2
+    dlq = [(r["dlq_reason"], r["delivery_attempts"]) for r in p.read_dlq().collect()]
+    assert dlq == [("schema_validation_failed", 1)]
+    assert p.read_sink().count() == 3 + 2

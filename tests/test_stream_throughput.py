@@ -1,4 +1,4 @@
-"""Sustained-throughput leg (VERDICT r9 #2): the CDC pipeline under its
+"""Sustained-throughput leg: the CDC pipeline under its
 production processing-time trigger must deliver the full spooled events
 table exactly once, in MULTIPLE flow-controlled micro-batches, and the
 measurement must report sane rate/latency figures the bench publishes."""
